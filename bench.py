@@ -163,15 +163,15 @@ def fixture_fingerprint(sf_dir: str) -> dict[str, dict[str, int]]:
 
 
 def _noise_ratio_vs_committed(
-    repo: str, timings: dict[str, float], fp_digest: str
+    repo: str, timings: dict[str, float], fp_digest: str, cpus: int
 ) -> float | None:
     """Median per-key wall-time ratio of THIS run vs the committed
     BENCH_LOCAL.json reference — the run's uniform machine-condition
     factor (r7 verdict ask #4c: driver-vs-builder at byte-identical HEAD
     measured a uniform median 1.15x, p90 1.34x; a fixed per-key threshold
     cannot survive that, a normalized one can). Returns None when the
-    reference is absent, at a different sf/fixture vintage, or shares too
-    few keys for a stable median."""
+    reference is absent, at a different sf/fixture vintage or core count,
+    or shares too few keys for a stable median."""
     import statistics
 
     try:
@@ -180,6 +180,8 @@ def _noise_ratio_vs_committed(
         return None
     if ref.get("fixture_fp") != fp_digest:
         return None  # different sf or regenerated fixtures: not comparable
+    if ref.get("cpus") != cpus:
+        return None  # other (or unrecorded) core count: not comparable
     ratios = [
         timings[k] / ref["queries"][k]
         for k in set(timings) & set(ref.get("queries", {}))
@@ -188,44 +190,6 @@ def _noise_ratio_vs_committed(
     if len(ratios) < 20:
         return None
     return round(statistics.median(ratios), 3)
-
-
-def _watch_items(
-    repo: str, timings: dict[str, float], noise: float | None
-) -> dict[str, dict]:
-    """Adjudicate the open watch items in BENCH_WATCH.json against this
-    run: three-point driver trend from the artifact's baselines, plus the
-    noise-normalized current reading the close rule is applied to."""
-    try:
-        watch = json.load(open(os.path.join(repo, "BENCH_WATCH.json")))
-    except Exception:
-        return {}
-    out: dict[str, dict] = {}
-    for key, item in watch.get("open", {}).items():
-        base = item["baselines"][item["close_vs"]]
-        now = timings.get(key)
-        normalized = (
-            round(now / noise, 4) if now is not None and noise else now
-        )
-        factor = item["close_factor"]
-        out[key] = {
-            "baselines": item["baselines"],
-            "now": now,
-            "normalized": normalized,
-            "normalized_vs_base": (
-                round(normalized / base, 2) if normalized is not None else None
-            ),
-            "verdict": (
-                None
-                if normalized is None
-                else f"normalized<={factor}x_{item['close_vs']}: "
-                "environmental, close"
-                if normalized <= factor * base
-                else f"normalized>{factor}x_{item['close_vs']}: investigate"
-            ),
-            "note": item.get("note"),
-        }
-    return out
 
 
 def _default_out_path(repo: str) -> str:
@@ -317,6 +281,7 @@ def main(update_local: bool = False) -> None:
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         extended[key] = round(time.perf_counter() - t0, 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    cpus = spark.sparkContext.defaultParallelism
     fp = fixture_fingerprint(sf_dir)
     # stdout must survive a last-2000-chars tail capture (round-4 lesson),
     # so the line carries a 12-hex digest of the fingerprint; the full
@@ -342,6 +307,7 @@ def main(update_local: bool = False) -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "fixture_fp": fp_digest,
+        "cpus": cpus,
         # self-explaining stderr (round-6 ask #8): any "WindowExec: No
         # Partition Defined" warnings in this run's log come from the
         # quantiles helpers' P-row offsets branch (operators/quantiles.py
@@ -356,21 +322,9 @@ def main(update_local: bool = False) -> None:
             "equidepth B-row bounds); all allowlisted-bounded; benign"
         ),
     }
-    # Watch-item adjudication (r7 verdict asks #4b/#4c): baselines live in
-    # the committed BENCH_WATCH.json artifact, never in this source file.
-    # Each open item's "now" reading is normalized by this run's
-    # noise_ratio_vs_committed (median per-key ratio vs the committed
-    # BENCH_LOCAL.json at the same fixture vintage) so a uniform
-    # machine-condition shift (r7 measured 1.15x at byte-identical HEAD)
-    # cancels out of the trend before the close rule is applied.
-    # Only comparable (and only emitted) at sf0.1.
-    noise = _noise_ratio_vs_committed(repo, timings, fp_digest)
+    noise = _noise_ratio_vs_committed(repo, timings, fp_digest, cpus)
     if noise is not None:
         payload["noise_ratio_vs_committed"] = noise
-    if payload["sf"] == 0.1:
-        watch = _watch_items(repo, timings, noise)
-        if watch:
-            payload["watch_items"] = watch
     full = dict(payload)
     full["extended_queries"] = extended
     full["cold_total_wall"] = cold_total

@@ -3317,9 +3317,8 @@ def ext_hits_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     key exact: integer scores stay int64 (no normalization float), and
     the oracle unrolls the same two rounds as CTEs — the
     ext_label_propagation_bounded verification pattern. Top-20 by hub
-    with node tie-break. Vetted off-registry since round 9
-    (tests/thaw_oracles_r9.py); registered round 11 with the Family-N3
-    NULL-embedding gate both sides.
+    with node tie-break. Vetted off-registry since round 9; registered
+    round 11 with the Family-N3 NULL-embedding gate both sides.
 
     Scale: each round is one edge-list equi-join against a
     node-score aggregate (broadcast here — node scores are
@@ -3499,7 +3498,7 @@ def ext_graph_degeneracy_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate already in the shared edge base (the r8-vetted proto predated
     the X1 zero-norm fix — its mutual-kNN base inherits _EMB_SCORABLE_CTE
     / _emb_scorable through ext_mutual_knn_pairs, which is why this
-    registration waited for the gate; thaw_protos_r8.py:296).
+    registration waited for the gate).
 
     Scale: each peel round is one groupBy + two BROADCAST semi-joins over
     the edge list (bounded: |nodes| × k edges from the kNN construction —
@@ -3995,8 +3994,8 @@ def ext_dbscan_core_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Matryoshka truncation-recall + binary-Hamming cascade (round-12 close
-# registrations; tranche-5 protos validated in tests/thaw_protos_r12.py
-# across sf0.001/0.01/0.1 and all five audit fixture modes)
+# registrations; tranche-5 protos validated across sf0.001/0.01/0.1 and
+# all five audit fixture modes)
 # ---------------------------------------------------------------------------
 
 MRL_DIMS = (8, 16, 32)

@@ -4088,8 +4088,7 @@ def ext_sample_representativeness(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# BPE merge training, k unrolled rounds (round-11 thaw; vetted since r8 in
-# tests/thaw_protos_r8.py / thaw_oracles_r8.py)
+# BPE merge training, k unrolled rounds (round-11 thaw; vetted since r8)
 # ---------------------------------------------------------------------------
 
 _BPE_ROUND_SQL = """

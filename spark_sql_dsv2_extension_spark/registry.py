@@ -54,563 +54,10 @@ _MODULES = (
 
 _loaded = False
 
-# Driver-facing key order. The driver's per-round correctness pass walks
-# ``queries()`` in dict order with a bounded window (rounds 1 and 2 each
-# covered exactly the first 50 keys), so rotate previously-unverified keys
-# to the front each round: round 1 verified the first 50 registration-order
-# keys (scans/filters/joins/aggregates/windows); round 2 verified the fixed
-# errs, the §2C extensions, streaming, and TPC-H (50/50 green, see
-# CORRECTNESS_r02.json). Round 3 fronts the remaining 50 driver-unverified
-# keys: sources/sinks, UDFs, subqueries, set-ops, sorts, the scalar-function
-# families, and the two newest ext_* keys. Keys added during round 3 are
-# inserted right AFTER position 50 so they head the round-4 window. Keys
-# absent from this list follow in module registration order; driver-green
-# keys go last (they stay fully covered by tests/test_parity.py either way).
-#
-# ROUND-10 ROTATION (as executed; counts corrected at the r11 rotation):
-# the r9 window rotated behind, backlog ZERO, every slot conscious
-# spending — 13 Family-A re-fronts, 14 Family-B/E4 try_divide re-fronts,
-# 1 Family-C re-front, 9 EMPTY_AUDIT_r9.md re-fronts, 1 measured-positive
-# perf re-front (the second measured not actionable, its slot
-# reallocated), and 12 thaw registrations at slots 39-50. Cumulative
-# 452/452 (CORRECTNESS_r10.json: 50/50 green).
-#
-# ROUND-11 ROTATION (applied this round): the r10 window rotates behind.
-# Backlog stays ZERO, so the whole window is again conscious spending:
-# the NULL_AUDIT_r10.md hardening worklist (engine-raise families N2+N6
-# first, then N3 gates, N1 ordering pins, N4/N5 explicit semantics) plus
-# the ADVICE ext_random_projection_jl re-front; two N5 overflow fixes sit
-# at slots 51-52 and front round 12. Where BOTH sides change (N1/N4/N5),
-# the oracle edits ship in lockstep with the plan edits — the choice of
-# NULL semantics IS the fix (NULL_AUDIT_r10.md's documented exception).
-#
-# STALE-ROW DISCIPLINE (hold at zero cost): before any perf or shared-helper
-# change, classify every touched key — in-window -> free; driver-unverified
-# -> free; verified + not-in-window -> DEFER the change until its block
-# naturally rotates into a window (or consciously spend a re-front slot).
-# Round 6 paid 4 slots for this; round 7 pays 0 by deferring instead.
-#
-# NET-NEW KEY FREEZE & THAW RULE (r6 verdict ask #2): registration of
-# net-new keys stays FROZEN while the driver backlog is >=100. The backlog
-# is 84 at the round-8 rotation, so the freeze LIFTS this round (capped at
-# ~10 registrations per the r7 verdict ask #2, so round 9 can still close
-# the registry). A new key is admissible ONLY if ONE COMMIT contains all of:
-#   (a) the implementation registered with its exact DuckDB oracle
-#       (oracle=None requires a SURVEY-cited justification in the
-#       docstring),
-#   (b) a plan audit (tests/test_plans.py) or an _EXCHANGE_BUDGETS entry
-#       pinning its planned shuffle width, and
-#   (c) a driver-sim pass for the key recorded in that commit's message
-#       (vanilla-session oracle compare at sf0.01, same harness as
-#       DRIVER_SIM_r*.txt).
-# New keys are inserted immediately after the current driver window so
-# they front the next round without displacing queued coverage.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # === ROUND-17 WINDOW (CORRECTNESS_r16 came back 50/50 green —
-    # cumulative coverage holds at 462/462, zero never-checked keys,
-    # zero latest-row failures; rounds 1-3 stay retired and round 4
-    # retires at r17 close. All 50 slots are deliberate re-fronts,
-    # per the r16 optimization verdict ask #2 + the staleness
-    # arithmetic continuing ROADMAP_r16.md. ===
-    #
-    # --- slots 1-16: the sixteen r16-restructured keys (r16 verdict
-    # ask #2 verbatim): only winnow + hll of the ~16 restructured
-    # keys sat in the r16 driver window, so the driver re-verifies
-    # every restructured key here (they ARE all covered by the
-    # 462-key pytest parity sweep each round; this is the scheduled
-    # driver-row refresh). tpch_q2 carries the r16-build ordering pin
-    # (was slot 51 overflow). ---
-    "ext_near_dedup_minhash",
-    "ext_dedup_clusters",
-    "ext_dedup_survivorship",
-    "ext_dedup_cascade_report",
-    "ext_dup_pair_bleu",
-    "ext_coverage_maximization",
-    "ext_kneser_ney_bigrams",
-    "ext_equidepth_histogram",
-    "ext_ivfpq_search",
-    "ext_pq_adc_search",
-    "ext_burrows_delta",
-    "ext_tfidf_topterms",
-    "ext_bm25",
-    "ext_hll_union",
-    "fn_json",
-    "tpch_q2_min_cost_supp",
-    # --- slot 17: ext_behavior_similarity — restructure target of the
-    # r16 verdict ask #6 (heaviest untouched exec-bound key); its
-    # fresh driver row under any r17 change lands here. ---
-    "ext_behavior_similarity",
-    # --- slots 18-35: the full 18-key r4-staleness remainder —
-    # retires round 4 from the staleness ledger entirely (min
-    # last-checked reaches 5 at r17 close). ---
-    "ext_ab_test_lift",
-    "ext_benford_audit",
-    "ext_dataset_diff",
-    "ext_distribution_drift",
-    "ext_forget_cascade",
-    "ext_html_extract",
-    "ext_integrity_audit",
-    "ext_intradoc_dedup",
-    "ext_lsa_power_step",
-    "ext_negative_sampling_table",
-    "ext_ngram_novelty",
-    "ext_pagerank_bounded",
-    "ext_sentiment_lexicon",
-    "ext_session_bounce_rate",
-    "ext_split_doc_detect",
-    "fn_xml",
-    "sink_python_stream",
-    "sql_recursive_hierarchy",
-    # --- slots 36-50: conscious staleness spending — the first 15 of
-    # the 22-key r5-staleness tail, oldest-first in r5-window drain
-    # order (ext_burrows_delta left this tail for slot 11). The 7-key
-    # r5 remainder drains in round 18. ---
-    "ext_ndcg_eval",
-    "ext_mrr_eval",
-    "ext_doc_prefix_dedup",
-    "ext_ngram_overlap_diversity",
-    "ext_neyman_allocation",
-    "win_cumulative_distinct",
-    "ext_output_file_planner",
-    "ext_permutation_test",
-    "ext_incremental_agg_merge",
-    "ext_mann_kendall_trend",
-    "ext_kaplan_meier_retention",
-    "ext_entropy_rate_markov",
-    "ext_walk_forward_splits",
-    "ext_srm_check",
-    "ext_shapley_attribution",
-    # --- verified backlog: newest-verified first (the r16 window,
-    # then the r15 window, then the remaining registry in its prior
-    # rotation order — per-round provenance lives in git history of
-    # this block and in the CORRECTNESS_r*.json artifacts). ---
-    "sink_merge_upsert",
-    "ext_weighted_median",
-    "fn_printf_format",
-    "ext_span_corruption",
-    "ext_mann_whitney_u",
-    "agg_max_by_min_by",
-    "ext_hybrid_retrieval",
-    "ext_dtw_bounded",
-    "subq_scalar",
-    "subq_in",
-    "subq_exists_correlated",
-    "subq_lateral",
-    "subq_not_in_null",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_except_all",
-    "set_union_by_name",
-    "set_intersect_all",
-    "distinct_rows",
-    "topk_limit",
-    "topk_per_group",
-    "win_fill_forward",
-    "fn_regex",
-    "fn_date",
-    "fn_conditional",
-    "fn_array_explode",
-    "fn_bitwise",
-    "fn_hash",
-    "fn_json_nested",
-    "ext_cms_heavy_hitters",
-    "ext_bloom_probe",
-    "join_bloom_runtime",
-    "ext_bpe_pair_stats",
-    "ext_winnow_fingerprints",
-    "ext_perplexity_buckets",
-    "scan_file_metadata",
-    "fn_collation",
-    "ext_dsir_importance",
-    "ext_shard_manifest",
-    "ext_token_budget_trim",
-    "ext_temperature_mixture",
-    "ext_sentence_segmentation",
-    "join_asof_nearest",
-    "ext_quality_funnel",
-    "ext_ohlc_resample",
-    "ext_dataset_card",
-    "win_gap_islands",
-    "ext_theil_sen_slope",
-    "ext_point_in_time_join",
-    "agg_mode",
-    "agg_bool_countif",
-    "win_rank_dense",
-    "win_ntile_first_last",
-    "win_cume_percent",
-    "win_session_gaps",
-    "agg_approx_count_distinct",
-    "ext_exact_dedup",
-    "ext_near_dedup_simhash",
-    "ext_text_stats",
-    "ext_token_count",
-    "ext_quality_score",
-    "ext_langid",
-    "ext_fingerprint",
-    "ext_hash_split",
-    "ext_pii_scrub",
-    "ext_text_normalize",
-    "ext_sequence_packing",
-    "ext_decontamination",
-    "ext_validate_rules",
-    "ext_stratified_sample",
-    "ext_multimodal_struct",
-    "stream_tumbling_agg",
-    "stream_sliding_agg",
-    "stream_session_window",
-    "stream_watermark_late_drop",
-    "stream_static_join",
-    "stream_sink_files",
-    "stream_stream_join",
-    "stream_stream_left_outer",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_volume",
-    "tpch_q10_returned_items",
-    "tpch_q16_supplier_cnt",
-    "tpch_q18_large_volume",
-    "ext_corpus_pipeline",
-    "stream_sink_catalog_table",
-    "scan_python_stream_source",
-    "sink_sorted_layout",
-    "scan_csv",
-    "scan_orc",
-    "scan_ignore_corrupt",
-    "udf_pandas_scalar",
-    "udtf_python",
-    "ext_embedding_width_audit",
-    "ext_payload_shape_profile",
-    "ext_text_shape_audit",
-    "ext_hard_negatives",
-    "ext_knn_label_agreement",
-    "ext_kcenter_coreset",
-    "ext_ann_recall_eval",
-    "ext_ann_recall_curve",
-    "ext_ann_ivf_nprobe_curve",
-    "ext_mutual_knn_pairs",
-    "ext_retrieval_auc",
-    "ext_graph_degeneracy_core",
-    "ext_hits_bounded",
-    "scan_parquet",
-    "scan_projection_pushdown",
-    "scan_filter_pushdown",
-    "count_star_fastpath",
-    "project_expr",
-    "filter_compound",
-    "filter_null_semantics",
-    "filter_in_between_like",
-    "join_multi_key_chain",
-    "join_inner_equi",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_cross",
-    "join_theta_range",
-    "join_range_banded",
-    "join_broadcast_hint",
-    "join_skew_salted",
-    "join_bucketed_colocated",
-    "join_asof_time",
-    "join_shuffle_hash_hint",
-    "agg_hash_group",
-    "agg_global",
-    "agg_count_distinct",
-    "agg_multi_distinct",
-    "agg_having",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_pivot",
-    "agg_unpivot",
-    "agg_percentile",
-    "agg_filtered",
-    "agg_histogram",
-    "ext_mrl_truncation_curve",
-    "ext_knn_binary_hamming",
-    "ext_minhash_jaccard_estimate",
-    "agg_salted_twophase",
-    "ext_quantile_treatment_effect",
-    "ext_conformal_interval",
-    "ext_time_weighted_avg",
-    "stream_dedup_watermark",
-    "ext_mips_cosine_reduction",
-    "ext_rank_fusion_rrf",
-    "ext_dbscan_core_points",
-    "ext_triangle_count",
-    "ext_graph_modularity",
-    "ext_conductance_communities",
-    "ext_degree_assortativity",
-    "ext_label_propagation_bounded",
-    "ext_embedding_whitening",
-    "ext_embedding_outliers",
-    "ext_label_centroids",
-    "ext_label_cohesion",
-    "ext_silhouette_labels",
-    "udaf_pandas_grouped",
-    "udaf_grouped_map_zscore",
-    "ext_energy_distance",
-    "ext_embedding_centroid_drift",
-    "ext_random_projection_jl",
-    "ext_good_turing",
-    "fn_variant_extract",
-    "scan_json",
-    "ext_item_cooccurrence_lift",
-    "ext_cooccurrence_degree_dist",
-    "ext_khop_neighborhood",
-    "ext_link_prediction_jaccard",
-    "ext_ucb_ranking",
-    "ext_als_rank1",
-    "ext_knn_cosine",
-    "ext_knn_lsh",
-    "ext_knn_lsh_multiprobe",
-    "ext_knn_ivf",
-    "ext_knn_int8",
-    "ext_knn_ivf_trained",
-    "ext_kmeans_train",
-    "ext_semdedup",
-    "ext_product_quantize",
-    "ext_embedding_near_dup",
-    "ext_embedding_quantize",
-    "fn_struct",
-    "scan_text",
-    "stream_foreach_batch_sink",
-    "ext_bpe_train_k_rounds",
-    "sink_compression_roundtrip",
-    "agg_kll_quantile_invariant",
-    "fn_cast",
-    "fn_math",
-    "fn_string",
-    "agg_approx_percentile_invariant",
-    "ext_multimodal_decode",
-    "ext_multimodal_frames",
-    "ext_multimodal_resize",
-    "ext_multimodal_aspect_buckets",
-    "ext_design_effect_icc",
-    "ext_sax_symbols",
-    "udf_python_scalar",
-    "udf_arrow_scalar",
-    "stream_stateful_user_profile",
-    "ext_ks_two_sample",
-    "ext_poisson_bootstrap_ci",
-    "ext_spearman_corr",
-    "ext_t_closeness_audit",
-    "win_row_number",
-    "win_lag_lead",
-    "win_running_sum_rows",
-    "win_nth_value",
-    "sort_multi_dir",
-    "dedup_by_key",
-    "ext_scd2_versions",
-    "ext_rfm_segmentation",
-    "stream_complete_topk",
-    "agg_collect_sorted",
-    "ext_sequential_patterns",
-    "ext_quantile_align_sources",
-    "ext_wasserstein_1d",
-    "ext_calibration_ece",
-    "ext_tukey_fences",
-    "ext_functional_dependency",
-    "agg_min_by_max_by",
-    "agg_hll_native_union",
-    "fn_string_extras",
-    "fn_array",
-    "fn_map",
-    "fn_map_hof",
-    "ext_dedup_threshold_curve",
-    "ext_dup_transitivity_audit",
-    "ext_minhash_fidelity",
-    "ext_minhash_band_tuning",
-    "ext_ngram_jaccard",
-    "ext_near_dup_containment",
-    "ext_cross_source_dup_rate",
-    "ext_split_leakage",
-    "agg_stats_corr",
-    "ext_jackknife_blocks",
-    "ext_cross_correlation_lags",
-    "ext_chi2_terms",
-    "ext_acf_daily",
-    "ext_cramers_v",
-    "ext_cohens_kappa",
-    "ext_cuped_adjustment",
-    "ext_consistent_hash_ring",
-    "scan_partition_prune",
-    "sink_overwrite_dynamic",
-    "sink_compaction",
-    "sink_python_datasource",
-    "join_dpp_partition_prune",
-    "scan_python_datasource",
-    "scan_python_datasource_pushdown",
-    "ext_simpson_diversity",
-    "ext_matrix_profile_daily",
-    "ext_holt_winters_seasonal",
-    "stream_stream_full_outer",
-    "ext_paragraph_dedup",
-    "join_asof_tolerance",
-    "join_interval_point_containment",
-    "ext_holt_winters_additive",
-    "ext_anomaly_mad_rolling",
-    "ext_shard_skew_rebalance",
-    "tpch_q20_potential_promo",
-    "ext_lang_confusion",
-    "ext_type_token_ratio",
-    "fn_url_parse",
-    "ext_timeseries_densify",
-    "ext_hypertable_rollup",
-    "ext_vocab_oov_rate",
-    "ext_curriculum_order",
-    "ext_length_outliers",
-    "join_merge_hint",
-    "fn_from_csv",
-    "fn_base_conv",
-    "ext_bigram_logprob",
-    "agg_bitmap_distinct",
-    "ext_join_skew_report",
-    "ext_packing_efficiency",
-    "fn_array_hof",
-    "subq_scalar_correlated_select",
-    "ext_shared_span_dedup",
-    "ext_funnel_analysis",
-    "ext_retention_cohorts",
-    "ext_multimodal_meta_prune",
-    "ext_l_diversity_audit",
-    "ext_bloom_size_planner",
-    "udtf_arrow",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q12_late_shipments",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q19_disjunctive",
-    "tpch_q22_global_sales",
-    "ext_chunk_documents",
-    "ext_repetition_score",
-    "ext_ngram_topk",
-    "ext_length_histogram",
-    "ext_label_balance",
-    "agg_percentile_exact",
-    "pivot_wide",
-    "unpivot_long",
-    "ext_unigram_logprob",
-    "agg_stats_exact",
-    "ext_dataset_mixture",
-    "stream_document_etl",
-    "fn_datetime_arith",
-    "win_time_range_rolling",
-    "ext_dedup_incremental",
-    "ext_fuzzy_dedup_levenshtein",
-    "tpch_q13_customer_distribution",
-    "tpch_q21_waiting_supplier",
-    "ext_pmi_bigrams",
-    "scan_csv_malformed",
-    "join_null_safe_eq",
-    "fn_try_arith",
-    "udf_map_in_pandas",
-    "agg_grouping_id",
-    "stream_restart_incremental",
-    "ext_word_entropy",
-    "scan_parquet_schema_evolution",
-    "ext_source_quality_report",
-    "tpch_q11_important_stock",
-    "ext_zorder_layout",
-    "ext_feature_hashing",
-    "ext_target_encoding_loo",
-    "ext_weighted_sample_aes",
-    "ext_group_kfold",
-    "ext_multimodal_payload_dedup",
-    "ext_multimodal_shard_pack",
-    "fn_interval_arith",
-    "ext_ctr_wilson",
-    "ext_holdout_lm_eval",
-    "ext_source_vocab_overlap",
-    "ext_rake_keyphrases",
-    "ext_churn_labels",
-    "ext_extractive_summary",
-    "ext_join_order_cost_model",
-    "ext_kmv_intersection",
-    "ext_power_analysis",
-    "ext_did_estimate",
-    "ext_gini_concentration",
-    "ext_mutual_information",
-    "ext_sample_k_per_group",
-    "ext_mad_outliers",
-    "ext_seasonal_profile",
-    "ext_join_cardinality_estimate",
-    "ext_classifier_metrics",
-    "ext_epoch_shuffle_plan",
-    "ext_learning_curve_subsets",
-    "ext_repetition_clip",
-    "ext_zipf_fit",
-    "ext_burstiness_fano",
-    "ext_cusum_changepoint",
-    "ext_heaps_law_points",
-    "scan_union_multiformat",
-    "ext_run_length_stats",
-    "ext_freshness_lag",
-    "ext_first_touch_attribution",
-    "ext_lorenz_curve",
-    "win_rolling_regression",
-    "join_multi_exists_onepass",
-    "ext_sliding_active_users",
-    "stream_chained_dedup_daily_active",
-    "ext_seasonal_decompose",
-    "ext_share_of_parent",
-    "ext_lsh_bucket_stats",
-    "ext_sample_representativeness",
-    "agg_listagg_ordered",
-    "ext_log_odds_terms",
-    "ext_tokenizer_fertility",
-    "ext_vocab_coverage_curve",
-    "ext_dup_saturation_curve",
-    "ext_user_trend_slope",
-    "ext_interarrival_stats",
-    "ext_effective_sample_size",
-    "ext_hill_tail_index",
-    "ext_source_cap",
-    "ext_boilerplate_sentences",
-    "ext_code_detect",
-    "ext_readability",
-    "ext_kanonymity_audit",
-    "ext_winsorized_stats",
-    "ext_schema_profile",
-    "ext_ewma_events",
-    "ext_markov_transitions",
-    "ext_cdc_chunking",
-    "ext_inverted_index",
-    "ext_bpe_apply_merge",
-    "ext_conversion_deciles",
-    "win_range_frame",
-    "ext_file_skip_effectiveness",
-    "ext_knee_point",
-    "ext_ablation_leave_one_source",
-    "subq_quantified_all",
-    "join_interval_overlap_banded",
-    "ext_mase_seasonal_naive",
-    "ext_psm_nearest_match",
-    "ext_shuffle_quality_audit",
-    "ext_bh_fdr",
-)
 
-
-def _driver_order(reg: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Reorder the registry dict: prioritized keys first, rest afterwards."""
-    out: dict[str, QuerySpec] = {}
-    for name in _DRIVER_PRIORITY:
-        if name in reg:
-            out[name] = reg[name]
-    for name, spec in reg.items():
-        if name not in out:
-            out[name] = spec
-    return out
-
-
+# Admission rule: a new key registers with its exact DuckDB oracle
+# (``oracle=None`` needs a SURVEY-cited reason in its docstring) and ships
+# with a plan pin in tests/test_plans.py.
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation with its DuckDB oracle."""
 
@@ -624,10 +71,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every operator module (idempotent) and return the registry."""
+    """Import every operator module (idempotent); return the registry in
+    registration order."""
     global _loaded
     if not _loaded:
         for mod in _MODULES:
             importlib.import_module(mod)
         _loaded = True
-    return _driver_order(REGISTRY)
+    return dict(REGISTRY)

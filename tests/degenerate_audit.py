@@ -13,7 +13,6 @@ precondition (fix deferred per the stale-row rule, ROADMAP_r11).
 Usage:
     python tests/degenerate_audit.py                  # all registered keys
     python tests/degenerate_audit.py key1 key2 ...    # targeted
-    python tests/degenerate_audit.py --protos r9      # a thaw-candidate file
     python tests/degenerate_audit.py --empty [...]    # ZERO-ROW fixtures
                                                       # (round-9 frontier)
     python tests/degenerate_audit.py --nulls [...]    # NULL-bearing fixtures
@@ -1355,19 +1354,11 @@ def main() -> int:
             if a not in ("--empty", "--nulls", "--extreme", "--chaos",
                          "--ragged", "--ragged-chaos", "--lattice")
         ]
-    if args[:1] == ["--protos"]:
-        import importlib
+    from spark_sql_dsv2_extension_spark.registry import load_all
 
-        mod = importlib.import_module(f"tests.thaw_protos_{args[1]}")
-        omod = importlib.import_module(f"tests.thaw_oracles_{args[1]}")
-        pairs = {k: (fn, omod.ORACLES.get(k)) for k, fn in mod.PROTOS.items()}
-        keys = args[2:] or list(pairs)
-    else:
-        from spark_sql_dsv2_extension_spark.registry import load_all
-
-        specs = load_all()
-        pairs = {k: (s.fn, s.oracle) for k, s in specs.items()}
-        keys = args or list(pairs)
+    specs = load_all()
+    pairs = {k: (s.fn, s.oracle) for k, s in specs.items()}
+    keys = args or list(pairs)
 
     tmp = tempfile.mkdtemp(prefix="degenerate_audit_")
     builder = (

@@ -11,6 +11,7 @@ Arrow off), then compares each key against its DuckDB oracle exactly like
 ``tests/parity.compare``.
 
 Usage:  python tests/driver_sim.py [first_n | key1 key2 ...]
+With no arguments every registered key runs, in registration order.
 Exit status is non-zero if any key fails.
 """
 
@@ -37,10 +38,8 @@ def main() -> int:
     args = sys.argv[1:]
     if len(args) == 1 and args[0].isdigit():
         keys = list(specs)[: int(args[0])]
-    elif args:
-        keys = args
     else:
-        keys = list(specs)[:50]
+        keys = args or list(specs)
 
     # the driver's session: nothing but master + an app name
     spark = (

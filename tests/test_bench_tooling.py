@@ -1,6 +1,6 @@
 """Unit tests for bench.py's round-8 tooling: the run-stamped output
-path (a plain bench run must not touch the committed BENCH_LOCAL.json),
-the noise normalizer, and the artifact-driven watch-item adjudication.
+path (a plain bench run must not touch the committed BENCH_LOCAL.json)
+and the noise normalizer.
 No SparkSession needed — these exercise pure helpers against synthetic
 payloads in a tmp repo dir.
 """
@@ -21,80 +21,45 @@ def _write(path, obj):
         json.dump(obj, f)
 
 
-def _ref(tmp, fp="aabbccddeeff", n=25):
-    _write(
-        os.path.join(tmp, "BENCH_LOCAL.json"),
-        {"fixture_fp": fp, "queries": {f"k{i}": 1.0 + i * 0.1 for i in range(n)}},
-    )
-    return {f"k{i}": 1.0 + i * 0.1 for i in range(n)}
+def _ref(tmp, fp="aabbccddeeff", n=25, cpus=4):
+    ref = {"fixture_fp": fp, "queries": {f"k{i}": 1.0 + i * 0.1 for i in range(n)}}
+    if cpus is not None:
+        ref["cpus"] = cpus
+    _write(os.path.join(tmp, "BENCH_LOCAL.json"), ref)
+    return dict(ref["queries"])
 
 
 def test_noise_ratio_median_of_uniform_inflation(tmp_path):
     ref_q = _ref(str(tmp_path))
     timings = {k: v * 1.15 for k, v in ref_q.items()}
-    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff") == 1.15
+    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff", 4) == 1.15
 
 
 def test_noise_ratio_none_on_fixture_mismatch(tmp_path):
     ref_q = _ref(str(tmp_path))
     timings = {k: v * 1.15 for k, v in ref_q.items()}
     # regenerated fixtures / different sf: not comparable, never normalize
-    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "000000000000") is None
+    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "000000000000", 4) is None
+
+
+def test_noise_ratio_none_on_cpu_count_mismatch(tmp_path):
+    ref_q = _ref(str(tmp_path), cpus=32)
+    timings = {k: v * 1.15 for k, v in ref_q.items()}
+    # same fixtures, other core count: not comparable, never normalize
+    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff", 4) is None
+    # a reference that never recorded its core count is not comparable either
+    _ref(str(tmp_path), cpus=None)
+    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff", 4) is None
 
 
 def test_noise_ratio_none_below_min_shared_keys(tmp_path):
     _ref(str(tmp_path), n=10)  # < 20 shared keys: median too unstable
     timings = {f"k{i}": 1.0 for i in range(10)}
-    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff") is None
+    assert bench._noise_ratio_vs_committed(str(tmp_path), timings, "aabbccddeeff", 4) is None
 
 
 def test_noise_ratio_none_without_reference(tmp_path):
-    assert bench._noise_ratio_vs_committed(str(tmp_path), {"k": 1.0}, "x") is None
-
-
-def _watch_artifact(tmp, base=0.34, factor=2.0):
-    _write(
-        os.path.join(tmp, "BENCH_WATCH.json"),
-        {
-            "open": {
-                "some_key": {
-                    "baselines": {"r5_driver": base},
-                    "close_factor": factor,
-                    "close_vs": "r5_driver",
-                    "note": "n",
-                }
-            },
-            "closed": {},
-        },
-    )
-
-
-def test_watch_items_close_on_normalized_reading(tmp_path):
-    _watch_artifact(str(tmp_path))
-    # raw 0.75 would breach 2.0x0.34=0.68, but /1.15 normalizes to 0.65
-    out = bench._watch_items(str(tmp_path), {"some_key": 0.75}, 1.15)
-    item = out["some_key"]
-    assert item["normalized"] == round(0.75 / 1.15, 4)
-    assert "close" in item["verdict"]
-
-
-def test_watch_items_investigate_above_gate(tmp_path):
-    _watch_artifact(str(tmp_path))
-    out = bench._watch_items(str(tmp_path), {"some_key": 0.80}, 1.0)
-    assert "investigate" in out["some_key"]["verdict"]
-
-
-def test_watch_items_unnormalized_when_no_noise_ratio(tmp_path):
-    _watch_artifact(str(tmp_path))
-    out = bench._watch_items(str(tmp_path), {"some_key": 0.5}, None)
-    assert out["some_key"]["normalized"] == 0.5
-
-
-def test_watch_items_missing_key_and_missing_artifact(tmp_path):
-    _watch_artifact(str(tmp_path))
-    out = bench._watch_items(str(tmp_path), {}, 1.0)
-    assert out["some_key"]["verdict"] is None  # key absent from this run
-    assert bench._watch_items(str(tmp_path / "nope"), {"k": 1.0}, 1.0) == {}
+    assert bench._noise_ratio_vs_committed(str(tmp_path), {"k": 1.0}, "x", 4) is None
 
 
 def test_default_out_path_is_run_stamped_and_gitignored_dir(tmp_path):
@@ -104,11 +69,3 @@ def test_default_out_path_is_run_stamped_and_gitignored_dir(tmp_path):
     assert os.path.basename(p).startswith("bench_") and p.endswith(".json")
     # never the committed artifact
     assert "BENCH_LOCAL" not in p
-
-
-def test_committed_watch_artifact_parses_and_matches_schema():
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    watch = json.load(open(os.path.join(repo, "BENCH_WATCH.json")))
-    for key, item in watch.get("open", {}).items():
-        assert item["close_vs"] in item["baselines"], key
-        assert item["close_factor"] > 0, key

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from spark_sql_dsv2_extension_spark.registry import load_all
+from spark_sql_dsv2_extension_spark.registry import REGISTRY, load_all
 
 from .parity import compare
 
@@ -43,357 +43,6 @@ def test_oracle_keys_subset():
     q = e.queries()
     o = e.oracle_sql()
     assert set(o) <= set(q)
-    assert len(q) > 0
-
-
-def test_driver_priority_exactly_covers_registry():
-    """Rotation-list integrity: a typo'd or stale name in _DRIVER_PRIORITY
-    would silently fall out of the driver's bounded correctness window and
-    a missing name would get nondeterministic (registration-order) slots.
-    The list must be a permutation of the registry keys."""
-    from spark_sql_dsv2_extension_spark.registry import _DRIVER_PRIORITY
-
-    dupes = {k for k in _DRIVER_PRIORITY if _DRIVER_PRIORITY.count(k) > 1}
-    assert not dupes, f"duplicate rotation entries: {sorted(dupes)}"
-    assert set(_DRIVER_PRIORITY) == set(SPECS), (
-        f"stale names: {sorted(set(_DRIVER_PRIORITY) - set(SPECS))}; "
-        f"unlisted keys: {sorted(set(SPECS) - set(_DRIVER_PRIORITY))}"
-    )
-
-
-# Deliberate re-fronts this round (keys whose green driver row predates a
-# plan-changing rewrite, consciously re-spending a window slot).
-#
-# Round 11: CORRECTNESS_r10 came back 50/50 green (cumulative 452/452,
-# backlog still ZERO), so the ENTIRE window is again conscious spending
-# per ROADMAP_r11.md: the NULL_AUDIT_r10.md hardening worklist, ordered
-# engine-raise families first (N2 Python-worker None-crashes, N6
-# NULL-induced zero denominators), then N3 embedding/label NOT-NULL
-# gates, N1 explicit NULL-ordering pins, N4/N5 explicit-semantics picks
-# (minus the two N5 overflow keys at slots 51-52, which front round 12),
-# plus the ADVICE-flagged ext_random_projection_jl sign-matrix fix at
-# slot 50. The overflow keys (fn_struct, scan_text) are named here too:
-# their fixes land this round even though their driver re-verification
-# waits for the round-12 window.
-_R11_FIX_BATCH = frozenset({
-    # Family N2 (Python-worker None-crashes; NULL_AUDIT_r10.md raise sites)
-    "udf_python_scalar", "udf_arrow_scalar", "udaf_pandas_grouped",
-    "udaf_grouped_map_zscore", "ext_multimodal_decode",
-    "ext_multimodal_frames", "ext_multimodal_resize",
-    "ext_multimodal_aspect_buckets", "stream_stateful_user_profile",
-    # Family N6 (NULL-induced zero denominators; try_divide/nullif shape)
-    "ext_ks_two_sample", "ext_poisson_bootstrap_ci", "ext_spearman_corr",
-    "ext_t_closeness_audit",
-    # Family N3 (NULL embedding / NULL label NOT-NULL gates, both sides)
-    "ext_retrieval_auc", "ext_mips_cosine_reduction", "ext_rank_fusion_rrf",
-    "ext_conductance_communities", "ext_knn_ivf_trained",
-    "ext_dbscan_core_points", "ext_semdedup", "ext_kmeans_train",
-    "ext_ivfpq_search", "ext_embedding_centroid_drift",
-    # Family N1 (explicit NULL-ordering pins / NULL pre-filters, both sides)
-    "win_row_number", "win_lag_lead", "win_running_sum_rows",
-    "win_nth_value", "sort_multi_dir", "dedup_by_key", "ext_scd2_versions",
-    "ext_rfm_segmentation", "stream_complete_topk", "agg_collect_sorted",
-    "ext_sequential_patterns", "ext_quantile_align_sources",
-    "ext_wasserstein_1d", "ext_calibration_ece", "ext_tukey_fences",
-    "agg_approx_percentile_invariant", "agg_kll_quantile_invariant",
-    "ext_equidepth_histogram",
-    # Family N4 (multi-argument distinct/argmax NULL semantics)
-    "ext_functional_dependency", "agg_min_by_max_by", "agg_hll_native_union",
-    # Family N5 (scalar string/array/map NULL semantics; fn_struct and
-    # scan_text are the slots-51/52 overflow)
-    "fn_string", "fn_string_extras", "fn_array", "fn_map", "fn_map_hof",
-    "fn_struct", "scan_text",
-    # the 52nd audit key (slot-53 overflow): the n_batches constant was a
-    # fixture-scale oracle artifact, fixed oracle-side in lockstep
-    "stream_foreach_batch_sink",
-    # ADVICE medium: the JL sign-matrix degeneracy (plan + oracle lockstep)
-    "ext_random_projection_jl",
-})
-
-# Round 12: CORRECTNESS_r11 came back 50/50 green (cumulative 453/453,
-# backlog ZERO), so the window is again conscious spending per
-# ROADMAP_r12.md: the EXTREME_AUDIT_r11.md fix batches (X1 zero-norm +
-# X2(a) magnitude gates via the shared scorable-embedding gate, X2(b)
-# decimal/HUGEINT widenings, X3 try_cast idiom, X4 convention pins), the
-# r11 ADVICE fixes (agg_kll NULL-safe join; the BPE collapse fix rides
-# the already-queued ext_bpe_train_k_rounds registration slot), and the
-# two shingle-gate re-fronts. Slots 1-7 (r11 overflow + the round-12
-# registrations) are driver-UNVERIFIED keys, so they need no entry here;
-# the 13 X1/X2(a) overflow keys at slots 51-63 are named too — their
-# fixes land this round even though driver re-verification waits for the
-# round-13 window.
-_R12_FIX_BATCH = frozenset({
-    # shingle-gate re-fronts (gate landed at r11 close) + ADVICE medium
-    "ext_near_dedup_minhash", "ext_dedup_cascade_report",
-    "agg_kll_quantile_invariant",
-    # Family X4 convention pins + X3 fn_json
-    "udaf_pandas_grouped", "udaf_grouped_map_zscore", "fn_cast", "fn_math",
-    "fn_string", "fn_json", "agg_approx_percentile_invariant",
-    "ext_multimodal_decode", "ext_multimodal_frames", "ext_multimodal_resize",
-    "ext_multimodal_aspect_buckets",
-    # Family X3 try_cast (events.props.k)
-    "ext_item_cooccurrence_lift", "ext_cooccurrence_degree_dist",
-    "ext_khop_neighborhood", "ext_link_prediction_jaccard",
-    "ext_ucb_ranking", "ext_als_rank1",
-    # Family X2(b) decimal(38)/HUGEINT widenings
-    "ext_design_effect_icc", "ext_sax_symbols",
-    # Families X1+X2(a): the scorable-embedding gate (35 keys; 21 in
-    # window, 13 at slots 51-63, ext_hits_bounded rides its unverified
-    # registration slot)
-    "ext_knn_cosine", "ext_knn_lsh", "ext_knn_lsh_multiprobe", "ext_knn_ivf",
-    "ext_knn_int8", "ext_knn_ivf_trained", "ext_kmeans_train", "ext_semdedup",
-    "ext_ivfpq_search", "ext_product_quantize", "ext_pq_adc_search",
-    "ext_embedding_near_dup", "ext_embedding_quantize", "ext_hard_negatives",
-    "ext_knn_label_agreement", "ext_kcenter_coreset", "ext_ann_recall_eval",
-    "ext_ann_recall_curve", "ext_ann_ivf_nprobe_curve", "ext_mutual_knn_pairs",
-    "ext_retrieval_auc", "ext_mips_cosine_reduction", "ext_rank_fusion_rrf",
-    "ext_dbscan_core_points", "ext_triangle_count", "ext_graph_modularity",
-    "ext_conductance_communities", "ext_degree_assortativity",
-    "ext_label_propagation_bounded", "ext_embedding_whitening",
-    "ext_embedding_outliers", "ext_label_centroids", "ext_label_cohesion",
-    "ext_silhouette_labels",
-    # r11 N5-overflow keys whose fixes landed in r11 with verification
-    # deferred to this window
-    "fn_struct", "scan_text", "stream_foreach_batch_sink",
-    # chaos-audit (round-12 close) fixes at slots 51-55, verification
-    # fronting round 13: NULL-value exclusion from histogram order
-    # statistics, TWAP decimal widening, the epoch-0 watermark quarantine
-    "agg_salted_twophase", "ext_quantile_treatment_effect",
-    "ext_conformal_interval", "ext_time_weighted_avg",
-    "stream_dedup_watermark",
-})
-
-# Round 13: CORRECTNESS_r12 came back 50/50 green (cumulative 456/456,
-# backlog ZERO), so the window is again conscious spending per
-# ROADMAP_r13.md: the 21-key round-12 overflow block (slots 1-3 are the
-# driver-UNVERIFIED tranche-5/6 registrations and need no entry here;
-# slots 4-21 are the chaos-fix + scorable-gate-overflow re-fronts already
-# named in _R12_FIX_BATCH), the two _sql_round ADVICE re-fronts (the
-# shared pandas-worker rounding helper changes this round — its two
-# verified consumers re-verify), and the RAGGED_AUDIT_r13.md re-fronts:
-# the SHAPE frontier (seventh fixture dimension, opened this round)
-# found 45 divergences whose fixes touch 37 driver-verified keys beyond
-# the 15 already in-window — 27 re-front at slots 24-50 (Families W2+T
-# per-key fixes, the Family-J malformed-JSON idiom, the 13 most
-# load-bearing Family-W shared-gate consumers) and the 10-key Family-W
-# remainder overflows to slots 51-60 to front round 14 (named here too:
-# their fixes land this round). The planned staleness-refresh block
-# (oldest r1-verified keys) is displaced to slots 61+ and defers to
-# round 14 untouched.
-_R13_FIX_BATCH = frozenset({
-    # chaos-audit fixes (landed r12 close; re-verification fronts now)
-    "agg_salted_twophase", "ext_quantile_treatment_effect",
-    "ext_conformal_interval", "ext_time_weighted_avg",
-    "stream_dedup_watermark",
-    # X1/X2(a) scorable-gate overflow (fixes landed r12) — all 13 also
-    # carry this round's Family-W width gate
-    "ext_mips_cosine_reduction", "ext_rank_fusion_rrf",
-    "ext_dbscan_core_points", "ext_triangle_count", "ext_graph_modularity",
-    "ext_conductance_communities", "ext_degree_assortativity",
-    "ext_label_propagation_bounded", "ext_embedding_whitening",
-    "ext_embedding_outliers", "ext_label_centroids", "ext_label_cohesion",
-    "ext_silhouette_labels",
-    # the r12 ADVICE _sql_round carry fix (shared helper; both consumers)
-    "udaf_pandas_grouped", "udaf_grouped_map_zscore",
-    # RAGGED Families W2 + T (per-key semantic fixes)
-    "ext_energy_distance", "ext_embedding_centroid_drift",
-    "ext_random_projection_jl", "ext_good_turing",
-    "ext_kneser_ney_bigrams",
-    # RAGGED Family J (SQL_PROPS_JSON quarantine / try_parse_json)
-    "fn_json", "fn_variant_extract", "scan_json",
-    "ext_item_cooccurrence_lift", "ext_cooccurrence_degree_dist",
-    "ext_khop_neighborhood", "ext_link_prediction_jaccard",
-    "ext_ucb_ranking", "ext_als_rank1",
-    # RAGGED Family W (shared scorable-gate width condition), in-window
-    "ext_knn_cosine", "ext_knn_lsh", "ext_knn_lsh_multiprobe",
-    "ext_knn_ivf", "ext_knn_int8", "ext_knn_ivf_trained",
-    "ext_kmeans_train", "ext_semdedup", "ext_ivfpq_search",
-    "ext_product_quantize", "ext_pq_adc_search", "ext_embedding_near_dup",
-    "ext_embedding_quantize",
-    # RAGGED Family W overflow (slots 51-60; fixes land this round,
-    # driver re-verification fronts round 14)
-    "ext_hard_negatives", "ext_knn_label_agreement", "ext_kcenter_coreset",
-    "ext_ann_recall_eval", "ext_ann_recall_curve",
-    "ext_ann_ivf_nprobe_curve", "ext_mutual_knn_pairs", "ext_retrieval_auc",
-    "ext_graph_degeneracy_core", "ext_hits_bounded",
-})
-
-# Round 14: CORRECTNESS_r13 came back 50/50 green (cumulative 459/462 —
-# the only unverified keys are the 3 tranche-7 registrations now at
-# slots 1-3, which need no entry here). The window is ROADMAP_r14.md's
-# pre-computed arithmetic: the 10-key Family-W re-front overflow (fixes
-# landed r13, sweep-green at r13 HEAD), the 27-key r1-staleness block
-# displaced from the r13 window, and 10 conscious staleness slots drawn
-# oldest-first from the 16-key r1-verified remainder. Every verified key
-# in the window is a deliberate staleness/overflow re-front.
-_R14_REFRESH = frozenset({
-    # Family-W overflow (slots 4-13)
-    "ext_hard_negatives", "ext_knn_label_agreement", "ext_kcenter_coreset",
-    "ext_ann_recall_eval", "ext_ann_recall_curve",
-    "ext_ann_ivf_nprobe_curve", "ext_mutual_knn_pairs", "ext_retrieval_auc",
-    "ext_graph_degeneracy_core", "ext_hits_bounded",
-    # 27-key r1-staleness block (slots 14-40)
-    "scan_parquet", "scan_projection_pushdown", "scan_filter_pushdown",
-    "count_star_fastpath", "project_expr", "filter_compound",
-    "filter_null_semantics", "filter_in_between_like",
-    "join_multi_key_chain", "join_inner_equi", "join_left_outer",
-    "join_right_outer", "join_full_outer", "join_left_semi",
-    "join_left_anti", "join_cross", "join_theta_range", "join_range_banded",
-    "join_broadcast_hint", "join_skew_salted", "join_bucketed_colocated",
-    "join_asof_time", "join_shuffle_hash_hint", "agg_hash_group",
-    "agg_global", "agg_count_distinct", "agg_multi_distinct",
-    # r1-staleness remainder, first 10 (slots 41-50)
-    "agg_having", "agg_rollup", "agg_cube", "agg_grouping_sets",
-    "agg_pivot", "agg_unpivot", "agg_percentile", "agg_max_by_min_by",
-    "agg_filtered", "agg_histogram",
-})
-_DELIBERATE_REFRONTS: frozenset[str] = _R14_REFRESH
-
-# Round 15: CORRECTNESS_r14 came back 50/50 green — cumulative coverage
-# is literally 462/462 with zero never-checked keys and zero latest-row
-# failures, so EVERY key in the round-15 window is by definition a
-# deliberate re-front. The window is ROADMAP_r15.md's pre-computed
-# arithmetic: the 3 ragged-chaos semantic-fix re-fronts (fixes landed
-# r14 in lockstep with the eighth audit mode), the 6-key r1-staleness
-# tail (retires round 1 from the ledger), the full 34-key r2-staleness
-# tail (retires round 2), and the first 7 keys of the 30-key
-# r3-staleness tail in r3-window drain order.
-_R15_REFRESH = frozenset({
-    # ragged-chaos fix re-fronts (slots 1-3)
-    "ext_behavior_similarity", "ext_theil_sen_slope",
-    "ext_point_in_time_join",
-    # r1-staleness tail (slots 4-9)
-    "agg_mode", "agg_bool_countif", "win_rank_dense",
-    "win_ntile_first_last", "win_cume_percent", "win_session_gaps",
-    # r2-staleness tail (slots 10-43)
-    "agg_approx_count_distinct", "ext_exact_dedup", "ext_near_dedup_simhash",
-    "ext_text_stats", "ext_token_count", "ext_quality_score", "ext_langid",
-    "ext_tfidf_topterms", "ext_fingerprint", "ext_hash_split",
-    "ext_pii_scrub", "ext_text_normalize", "ext_sequence_packing",
-    "ext_decontamination", "ext_validate_rules", "ext_bm25",
-    "ext_stratified_sample", "ext_multimodal_struct", "stream_tumbling_agg",
-    "stream_sliding_agg", "stream_session_window",
-    "stream_watermark_late_drop", "stream_static_join", "stream_sink_files",
-    "stream_stream_join", "stream_stream_left_outer",
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_volume", "tpch_q10_returned_items",
-    "tpch_q16_supplier_cnt", "tpch_q18_large_volume", "ext_corpus_pipeline",
-    "stream_sink_catalog_table",
-    # r3-staleness tail head (slots 44-50)
-    "scan_python_stream_source", "sink_sorted_layout", "scan_csv",
-    "scan_orc", "scan_ignore_corrupt", "udf_pandas_scalar", "udtf_python",
-})
-_DELIBERATE_REFRONTS = _R15_REFRESH
-
-# Round 16: CORRECTNESS_r15 came back 50/50 green — cumulative coverage
-# holds at 462/462 (zero never-checked keys, zero latest-row failures),
-# so every key in the round-16 window is by definition a deliberate
-# re-front. The window is ROADMAP_r16.md's pre-computed arithmetic: the
-# eight lattice semantic-fix re-fronts (fixes landed r15 in lockstep
-# with the ninth audit mode; their first DRIVER rows under the new
-# semantics arrive this round), the full 23-key r3-staleness remainder
-# (retires round 3 from the ledger), and the first 19 keys of the
-# r4-staleness tail in r4-window drain order. One in-round overflow sits
-# at slot 51 and fronts round 17: tpch_q2_min_cost_supp (the
-# ORDERING_AUDIT_r15 residual — n_name/s_name asc_nulls_last pinned in
-# lockstep with the oracle's NULLS LAST; value-identical at every tested
-# SF).
-_R16_REFRESH = frozenset({
-    # lattice semantic-fix re-fronts (slots 1-8)
-    "sink_merge_upsert", "ext_weighted_median", "fn_printf_format",
-    "ext_span_corruption", "ext_mann_whitney_u", "agg_max_by_min_by",
-    "ext_hybrid_retrieval", "ext_dtw_bounded",
-    # r3-staleness remainder (slots 9-31)
-    "subq_scalar", "subq_in", "subq_exists_correlated", "subq_lateral",
-    "subq_not_in_null", "set_union_all", "set_union_distinct",
-    "set_intersect", "set_except", "set_except_all", "set_union_by_name",
-    "set_intersect_all", "distinct_rows", "topk_limit", "topk_per_group",
-    "win_fill_forward", "fn_regex", "fn_date", "fn_conditional",
-    "fn_array_explode", "fn_bitwise", "fn_hash", "fn_json_nested",
-    # r4-staleness tail head (slots 32-50)
-    "ext_hll_union", "ext_cms_heavy_hitters", "ext_bloom_probe",
-    "join_bloom_runtime", "ext_bpe_pair_stats", "ext_winnow_fingerprints",
-    "ext_perplexity_buckets", "scan_file_metadata", "fn_collation",
-    "ext_dsir_importance", "ext_shard_manifest", "ext_token_budget_trim",
-    "ext_temperature_mixture", "ext_sentence_segmentation",
-    "join_asof_nearest", "ext_quality_funnel", "ext_ohlc_resample",
-    "ext_dataset_card", "win_gap_islands",
-})
-_DELIBERATE_REFRONTS = _R16_REFRESH
-
-# Round 17 (second optimization round): CORRECTNESS_r16 came back 50/50
-# green — cumulative coverage holds at 462/462 (zero never-checked keys,
-# zero latest-row failures), so every key in the round-17 window is by
-# definition a deliberate re-front. Composition is the r16 optimization
-# verdict's ask #2 plus the staleness arithmetic: the sixteen
-# r16-restructured keys (only winnow + hll of them sat in the r16 driver
-# window; the rest get their scheduled driver-row refresh here, tpch_q2
-# carrying the r16-build ordering pin from its slot-51 overflow), the r17
-# restructure target ext_behavior_similarity (r16 verdict ask #6), the
-# full 18-key r4-staleness remainder (retires round 4 from the ledger),
-# and the first 15 keys of the 22-key r5-staleness tail in r5-window
-# drain order (ext_burrows_delta left that tail for the restructured
-# block).
-_R17_REFRESH = frozenset({
-    # r16-restructured re-fronts (slots 1-16)
-    "ext_near_dedup_minhash", "ext_dedup_clusters", "ext_dedup_survivorship",
-    "ext_dedup_cascade_report", "ext_dup_pair_bleu",
-    "ext_coverage_maximization", "ext_kneser_ney_bigrams",
-    "ext_equidepth_histogram", "ext_ivfpq_search", "ext_pq_adc_search",
-    "ext_burrows_delta", "ext_tfidf_topterms", "ext_bm25", "ext_hll_union",
-    "fn_json", "tpch_q2_min_cost_supp",
-    # r17 restructure target (slot 17)
-    "ext_behavior_similarity",
-    # r4-staleness remainder (slots 18-35)
-    "ext_ab_test_lift", "ext_benford_audit", "ext_dataset_diff",
-    "ext_distribution_drift", "ext_forget_cascade", "ext_html_extract",
-    "ext_integrity_audit", "ext_intradoc_dedup", "ext_lsa_power_step",
-    "ext_negative_sampling_table", "ext_ngram_novelty",
-    "ext_pagerank_bounded", "ext_sentiment_lexicon",
-    "ext_session_bounce_rate", "ext_split_doc_detect", "fn_xml",
-    "sink_python_stream", "sql_recursive_hierarchy",
-    # r5-staleness tail head (slots 36-50)
-    "ext_ndcg_eval", "ext_mrr_eval", "ext_doc_prefix_dedup",
-    "ext_ngram_overlap_diversity", "ext_neyman_allocation",
-    "win_cumulative_distinct", "ext_output_file_planner",
-    "ext_permutation_test", "ext_incremental_agg_merge",
-    "ext_mann_kendall_trend", "ext_kaplan_meier_retention",
-    "ext_entropy_rate_markov", "ext_walk_forward_splits", "ext_srm_check",
-    "ext_shapley_attribution",
-})
-_DELIBERATE_REFRONTS = _R17_REFRESH
-
-
-def test_driver_window_has_no_silent_refronts():
-    """Zero-stale-row discipline, testable: every key in the driver's
-    50-key window must be driver-UNVERIFIED (no row in any CORRECTNESS_r*.json
-    present in the working tree) unless it is a documented deliberate
-    re-front. A verified key appearing here by accident would waste a
-    coverage slot; a rewritten-but-not-re-fronted key is caught by the
-    inverse review at rotation time.
-
-    INTENTIONAL TRIPWIRE: the glob reads the WORKING TREE, not just
-    git-tracked files. At a round boundary the driver drops a fresh
-    (initially untracked) CORRECTNESS artifact whose keys are exactly the
-    unrotated window — this test then fails by design, forcing the next
-    round's first commit to be the rotation. Do not "fix" it by
-    restricting the glob to committed files."""
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verified: set[str] = set()
-    # r* (not r0*): artifact names grow to CORRECTNESS_r10.json and beyond
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        verified |= set(json.load(open(path)))
-    if not verified:
-        pytest.skip("no committed CORRECTNESS artifacts (fresh checkout)")
-    window = list(SPECS)[:50]
-    silent = [
-        k for k in window if k in verified and k not in _DELIBERATE_REFRONTS
-    ]
-    assert not silent, (
-        "driver-window slots spent on already-verified keys without a "
-        f"_DELIBERATE_REFRONTS entry: {silent}"
-    )
+    # the driver sees keys in registration order
+    assert list(q) == list(REGISTRY)
+    assert len(q) == 462
