@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+process's CPU count) and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {key: sec, ...}, "sf": ...}. The FULL payload (including
 per-key run spreads) is also written to a run-stamped file under

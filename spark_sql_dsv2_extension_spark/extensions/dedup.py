@@ -132,13 +132,7 @@ _EXACT_JACCARD_SQL = f"""
     "ext_near_dedup_minhash",
     oracle=_EXACT_JACCARD_SQL.format(thr=JACCARD_THRESHOLD),
 )
-def ext_near_dedup_minhash(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
+def ext_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, exact-Jaccard-verified.
 
     Pipeline (all DataFrame ops, shuffle only on band signatures and
@@ -163,6 +157,15 @@ def ext_near_dedup_minhash(
     3-grams. ``ext_dedup_cascade_report`` composes this operator and
     inherits the gate.
     """
+    return _minhash_pairs(spark, sf_dir, N_BANDS, JACCARD_THRESHOLD)
+
+
+def _minhash_pairs(
+    spark: SparkSession, sf_dir: str, n_bands: int, threshold: float
+) -> DataFrame:
+    """The ext_near_dedup_minhash pipeline with N_HASHES minhashes split
+    into ``n_bands`` bands, keeping verified pairs with Jaccard
+    ≥ ``threshold``."""
     docs = load(spark, sf_dir, "documents")
     # sh stays a .cache(), NOT a checkpoint leaf (r17, measured): a leaf
     # would truncate sig's and shc's analyzed plans, but it stores
@@ -186,9 +189,9 @@ def ext_near_dedup_minhash(
     # redundant under the leaf's own persistence — the self-join reads
     # ONE materialization either way).
     sig_cols = ", ".join(
-        f"min(xxhash64({i}, shingle)) AS h{i}" for i in range(n_hashes)
+        f"min(xxhash64({i}, shingle)) AS h{i}" for i in range(N_HASHES)
     )
-    rows_per_band = n_hashes // n_bands
+    rows_per_band = N_HASHES // n_bands
     band_arr = (
         "array("
         + ", ".join(
@@ -857,25 +860,10 @@ def ext_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _est_eps(n_hashes: int) -> float:
-    """5σ tolerance for the n-hash MinHash estimator: Ĵ is a mean of n
-    Bernoulli(J) indicators, so σ(Ĵ) ≤ √(0.25/n) and 5·√(0.25/n) is
-    ~5σ at any n. At the default width ONLY, the tolerance is pinned to
-    the r12-registered 0.25 so the default-96 pass band is bit-stable
-    with the verified history (r13 ADVICE: 5·√(0.25/96) ≈ 0.2552 would
-    silently widen an already-verified band); every other width gets the
-    honest 5σ value (r12/r14 ADVICE: a blanket min(0.25, ·) cap clamped
-    ALL n < 100 to 0.25, reinstating the ~2σ band at n = 16 that the
-    derivation was meant to fix). Ĵ≈0 on a real J ≥ 0.8 pair still
-    fails at any width."""
-    if n_hashes >= N_HASHES:
-        # pin the whole >= default range, not just n == 96 (r15 ADVICE:
-        # an exact-equality pin made the band non-monotonic — n = 97..99
-        # got the honest 0.2539-0.2552, LOOSER than the default's 0.25);
-        # for n > 100 the 0.25 cap is conservative vs the honest 5σ,
-        # which only tightens the invariant.
-        return 0.25
-    return 5.0 * (0.25 / n_hashes) ** 0.5
+# Ĵ is a mean of N_HASHES Bernoulli(J) indicators, so σ(Ĵ) ≤ √(0.25/96)
+# ≈ 0.051 and 0.25 is ~5σ (the honest 5σ, 0.2552, would widen the
+# verified band).
+_EST_EPS = 0.25
 
 
 @query(
@@ -886,19 +874,17 @@ def _est_eps(n_hashes: int) -> float:
         + ")"
     ),
 )
-def ext_minhash_jaccard_estimate(
-    spark: SparkSession, sf_dir: str, n_hashes: int = N_HASHES
-) -> DataFrame:
+def ext_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash SKETCH-ACCURACY INVARIANT (the agg_approx_count_distinct
     shape, applied to the dedup family's own machinery): for every exact
     near-duplicate pair (Jaccard ≥ 0.8 — the registered
     ext_near_dedup_minhash ground truth), the SIGNATURE-based estimate
     Ĵ = (#agreeing minhash positions)/96 must sit within eps of the
     exact Jaccard. E[Ĵ] = J exactly (each minhash position agrees with
-    probability J), and the binomial std of Ĵ is ≤ √(0.25/n_hashes)
-    (≈ 0.051 at the default 96), so eps = _est_eps(n_hashes) (~5σ at any
-    n) is robust without being vacuous: a broken signature pipeline — wrong seed mixing, a band
-    transposition, a stale cache — puts Ĵ near 0 on a J ≈ 0.8 pair and
+    probability J), and the binomial std of Ĵ is ≤ √(0.25/96) ≈ 0.051,
+    so eps = 0.25 (~5σ) is robust without being vacuous: a broken
+    signature pipeline — wrong seed mixing, a band transposition, a
+    stale cache — puts Ĵ near 0 on a J ≈ 0.8 pair and
     fails immediately. The oracle asserts the invariant (the exact pair
     list with literal TRUE), so the check is exact while the estimator
     stays sketch-based (DuckDB cannot and need not reproduce xxhash64).
@@ -916,20 +902,20 @@ def ext_minhash_jaccard_estimate(
         .agg(
             *[
                 F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-                for i in range(n_hashes)
+                for i in range(N_HASHES)
             ]
         )
     )
     s1 = sig.select(
         F.col("doc_id").alias("d1"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(n_hashes)],
+        *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)],
     )
     s2 = sig.select(
         F.col("doc_id").alias("d2"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(n_hashes)],
+        *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)],
     )
     agree = None
-    for i in range(n_hashes):
+    for i in range(N_HASHES):
         term = (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         agree = term if agree is None else agree + term
     return (
@@ -939,8 +925,8 @@ def ext_minhash_jaccard_estimate(
             "d1",
             "d2",
             (
-                F.abs(agree.cast("double") / n_hashes - F.col("jaccard"))
-                <= F.lit(_est_eps(n_hashes))
+                F.abs(agree.cast("double") / N_HASHES - F.col("jaccard"))
+                <= F.lit(_EST_EPS)
             ).alias("within_tol"),
         )
     )
@@ -1873,9 +1859,7 @@ def ext_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical movement to ext_near_dedup_minhash — bucketed
     candidates, verify-only exact Jaccard, then a 3-row aggregate."""
-    pairs = ext_near_dedup_minhash(
-        spark, sf_dir, n_bands=32, threshold=CURVE_MIN_THRESHOLD
-    )
+    pairs = _minhash_pairs(spark, sf_dir, 32, CURVE_MIN_THRESHOLD)
     # band on the RAW i/(n1+n2-i) double against double literals — the
     # bit-identical comparison both engines evaluate (scaling to integers
     # here would reintroduce a floor-vs-round boundary divergence)

@@ -208,12 +208,7 @@ _KNN_ORACLE = f"""
 
 
 @query("ext_knn_cosine", oracle=_KNN_ORACLE)
-def ext_knn_cosine(
-    spark: SparkSession,
-    sf_dir: str,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: each query vector (broadcast) against the
     full corpus, ranked per query with deterministic tie-break.
 
@@ -221,7 +216,7 @@ def ext_knn_cosine(
     narrow — without it a single-split corpus computes every cosine in one
     task."""
     emb = fan_out(_emb_scorable(spark, sf_dir))
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     sims = (
@@ -237,7 +232,7 @@ def ext_knn_cosine(
     )
     return (
         sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -283,13 +278,7 @@ _LSH_ORACLE = f"""
 
 
 @query("ext_knn_lsh", oracle=_LSH_ORACLE)
-def ext_knn_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = N_PLANES,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate kNN via random-hyperplane LSH — with an EXACT oracle.
 
     Plane p's component j is a deterministic pseudo-random value in
@@ -326,7 +315,7 @@ def ext_knn_lsh(
     def signature(vec: Column) -> Column:
         # fold over planes: acc*2 + sign_bit(projection)
         return F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
+            F.sequence(F.lit(0), F.lit(N_PLANES - 1)),
             F.lit(0).cast("long"),
             lambda acc, p: acc * 2
             + F.when(projection(vec, p) > 0, F.lit(1)).otherwise(F.lit(0)),
@@ -337,7 +326,7 @@ def ext_knn_lsh(
     sigs = emb.select(
         "vec_id", "embedding", signature(F.col("embedding")).alias("sig")
     ).cache()
-    q = sigs.filter(F.col("vec_id") < n_queries).select(
+    q = sigs.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("sig").alias("q_sig"),
@@ -356,7 +345,7 @@ def ext_knn_lsh(
             cosine(F.col("q_emb"), F.col("embedding")).alias("cosine_sim"),
         )
         .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -402,13 +391,7 @@ _IVF_ORACLE = f"""
 
 
 @query("ext_knn_ivf", oracle=_IVF_ORACLE)
-def ext_knn_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = N_CENTROIDS,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate kNN: route every vector to its nearest
     centroid (deterministic codebook: the first N_CENTROIDS corpus vectors
     stand in for trained k-means centroids), then search only the query's
@@ -420,7 +403,7 @@ def ext_knn_ivf(
     here; production raises nprobe and trains real centroids — the join
     shape is identical)."""
     emb = fan_out(_emb_scorable(spark, sf_dir))
-    cent = emb.filter(F.col("vec_id") < n_centroids).select(
+    cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
     w_assign = Window.partitionBy("vec_id").orderBy(
@@ -438,7 +421,7 @@ def ext_knn_ivf(
         .filter(F.col("rn") == 1)
         .drop("rn", "c_sim")
     ).cache()  # consumed by both sides of the cell join; assignment runs once
-    q = clustered.filter(F.col("vec_id") < n_queries).select(
+    q = clustered.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("centroid_id").alias("q_centroid"),
@@ -457,7 +440,7 @@ def ext_knn_ivf(
     )
     return (
         sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -558,12 +541,11 @@ def sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def train_kmeans(
-    emb: DataFrame, k: int = K_CLUSTERS, iters: int = KMEANS_ITERS
-) -> tuple[DataFrame, DataFrame]:
+def train_kmeans(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Lloyd's k-means over the embedding column, deterministic init = first
-    ``k`` vectors; returns ``(components, centroids)`` where components is
-    (cid, dim, comp, n_members) and centroids is (cid, c: array<double>).
+    K_CLUSTERS vectors, KMEANS_ITERS iterations; returns
+    ``(components, centroids)`` where components is (cid, dim, comp,
+    n_members) and centroids is (cid, c: array<double>).
 
     Per iteration: broadcast the K centroids, assign every vector to its
     nearest (squared euclidean, sequential fold → bit-identical across
@@ -572,12 +554,12 @@ def train_kmeans(
     N's assignments, and hence the final centroids, match the DuckDB
     oracle exactly despite being float math. One broadcast join + one
     (cid, dim) shuffle per iteration; no driver materialization."""
-    cent = emb.filter(F.col("vec_id") < k).select(
+    cent = emb.filter(F.col("vec_id") < K_CLUSTERS).select(
         F.col("vec_id").alias("cid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("c"),
     )
     comp = None
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         w = Window.partitionBy("vec_id").orderBy(F.col("sqd").asc(), F.col("cid").asc())
         members = (
             emb.crossJoin(F.broadcast(cent))
@@ -660,12 +642,7 @@ _IVF_TRAINED_ORACLE = f"""
 
 
 @query("ext_knn_ivf_trained", oracle=_IVF_TRAINED_ORACLE)
-def ext_knn_ivf_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF kNN with a TRAINED codebook — the full production composition:
     :func:`train_kmeans` learns the centroids (2 Lloyd iterations), every
     vector routes to its nearest trained centroid (squared euclidean, same
@@ -696,7 +673,7 @@ def ext_knn_ivf_trained(
         .filter(F.col("rn") == 1)
         .drop("rn", "sqd")
     ).cache()  # consumed by both sides of the cell join; assignment runs once
-    q = clustered.filter(F.col("vec_id") < n_queries).select(
+    q = clustered.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("cid").alias("q_cid"),
@@ -714,7 +691,7 @@ def ext_knn_ivf_trained(
     )
     return (
         sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -810,12 +787,7 @@ def ext_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rk <= {TOP_K}
     """,
 )
-def ext_knn_int8(
-    spark: SparkSession,
-    sf_dir: str,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k retrieval over int8-quantized embeddings — the serving side of
     ``ext_embedding_quantize``: integer dot products instead of float
     cosine (4× less memory traffic; SIMD int8 kernels in a real serving
@@ -842,7 +814,7 @@ def ext_knn_int8(
             ),
         ).alias("c"),
     )
-    q = codes.filter(F.col("vec_id") < n_queries).select(
+    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("c").alias("qc")
     )
     dots = codes.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
@@ -859,7 +831,7 @@ def ext_knn_int8(
     )
     return (
         dots.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -893,11 +865,7 @@ _SEMDEDUP_ORACLE = f"""
 
 
 @query("ext_semdedup", oracle=_SEMDEDUP_ORACLE)
-def ext_semdedup(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = SEMDEDUP_T,
-) -> DataFrame:
+def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the embedding space with k-means, then WITHIN each cluster drop any
     vector that is cosine-similar (≥ threshold) to a lower-id keeper —
@@ -939,7 +907,7 @@ def ext_semdedup(
             a,
             (F.col("cid") == F.col("a_cid")) & (F.col("a_id") < F.col("vec_id")),
         )
-        .filter(cosine(F.col("a_emb"), F.col("embedding")) >= threshold)
+        .filter(cosine(F.col("a_emb"), F.col("embedding")) >= SEMDEDUP_T)
         .select("vec_id")
         .distinct()
     )
@@ -1111,12 +1079,7 @@ _HN_ORACLE = f"""
 
 
 @query("ext_hard_negatives", oracle=_HN_ORACLE)
-def ext_hard_negatives(
-    spark: SparkSession,
-    sf_dir: str,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
     top-k most-similar corpus vectors with a DIFFERENT label — exactly the
     examples a dual-encoder trains against (similar enough to confuse,
@@ -1126,7 +1089,7 @@ def ext_hard_negatives(
     hit); at scale the LSH/IVF bucketed variants slot in identically, with
     the label filter applied to the candidate set."""
     emb = fan_out(_emb_scorable(spark, sf_dir))
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("label").alias("query_label"),
@@ -1147,7 +1110,7 @@ def ext_hard_negatives(
     )
     return (
         sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 
@@ -2086,13 +2049,7 @@ _MULTIPROBE_ORACLE = f"""
 
 
 @query("ext_knn_lsh_multiprobe", oracle=_MULTIPROBE_ORACLE)
-def ext_knn_lsh_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = N_PLANES,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def ext_knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-PROBE LSH: each query probes its own bucket AND every
     1-bit-flip neighbor bucket ({N_PLANES}+1 probes) — the standard
     recall lever that trades a constant factor of candidates for the
@@ -2126,7 +2083,7 @@ def ext_knn_lsh_multiprobe(
 
     def signature(vec: Column) -> Column:
         return F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
+            F.sequence(F.lit(0), F.lit(N_PLANES - 1)),
             F.lit(0).cast("long"),
             lambda acc, p: acc * 2
             + F.when(projection(vec, p) > 0, F.lit(1)).otherwise(F.lit(0)),
@@ -2135,7 +2092,7 @@ def ext_knn_lsh_multiprobe(
     sigs = emb.select(
         "vec_id", "embedding", signature(F.col("embedding")).alias("sig")
     ).cache()
-    q = sigs.filter(F.col("vec_id") < n_queries).select(
+    q = sigs.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("sig").alias("q_sig"),
@@ -2144,7 +2101,7 @@ def ext_knn_lsh_multiprobe(
         F.col("q_sig"),
         *[
             F.expr(f"q_sig ^ {1 << i}").alias(f"f{i}")
-            for i in range(n_planes)
+            for i in range(N_PLANES)
         ],
     )
     probes = q.select(
@@ -2169,7 +2126,7 @@ def ext_knn_lsh_multiprobe(
             cosine(F.col("q_emb"), F.col("embedding")).alias("cosine_sim"),
         )
         .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
     )
 
 

@@ -2,9 +2,9 @@
 
 Every operator in SURVEY.md §2B/§2C registers itself here as a
 ``(name, spark_fn, oracle_sql)`` triple; ``__spark_entry__.py`` exposes the
-collected inventory to the driver. ``oracle_sql=None`` marks the operator as
-non-SQL-expressible (driver falls back to a rows-only check — only used
-where SURVEY §2 flags *weaker*).
+collected inventory to the driver. Admission rule: every key registers
+with its exact DuckDB oracle and ships with a plan pin in
+tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -55,10 +55,7 @@ _MODULES = (
 _loaded = False
 
 
-# Admission rule: a new key registers with its exact DuckDB oracle
-# (``oracle=None`` needs a SURVEY-cited reason in its docstring) and ships
-# with a plan pin in tests/test_plans.py.
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation with its DuckDB oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:

@@ -112,93 +112,3 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-
-
-# NOT REGISTERED (round-16 resolution of the r15 verdict's gated-key
-# finding): transformWithStateInPandas speaks a protobuf wire protocol to
-# the JVM state server (pyspark/sql/streaming/stateful_processor_api_client.py
-# imports the generated StateMessage_pb2, which hard-requires the
-# google.protobuf runtime). That runtime is absent from this container and
-# cannot be vendored (a _pb2-compatible shim would be a protobuf
-# reimplementation), so a conditional registration could never be
-# driver-verified HERE — coverage-theater, per the verdict. The function
-# below stays as the documented API-parity path for protobuf-equipped
-# clusters; the REGISTERED, driver-verified custom-stateful-operator
-# coverage is ``stream_stateful_user_profile`` (applyInPandasWithState,
-# identical state-design envelope).
-def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas``: the successor API to
-    applyInPandasWithState, with TYPED, composable state primitives —
-    here a per-user MapState keyed by event_type holding a counter, the
-    canonical "per-entity feature counters" operator. Each micro-batch
-    updates the map and re-emits the user's current counters; counters
-    are monotone, so the final emission per (user, type) is selected by
-    max and the result equals the batch GROUP BY exactly.
-
-    Scale: state is O(distinct event types) per user key — bounded by
-    the type vocabulary, never event volume; the state store scales with
-    keys inside the retention horizon, and MapState gives per-field
-    point updates (no read-modify-write of a whole blob, which is the
-    concrete win over applyInPandasWithState at large state)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ev = _stream_source(spark, sf_dir).select("user_id", "event_type")
-
-    out_schema = "user_id BIGINT, event_type STRING, n BIGINT"
-
-    class CountsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.counts = handle.getMapState(
-                "counts", "event_type STRING", "n BIGINT"
-            )
-
-        def handleInputRows(
-            self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in rows:
-                for et, cnt in pdf["event_type"].value_counts().items():
-                    prev = (
-                        self.counts.getValue((et,))
-                        if self.counts.containsKey((et,))
-                        else None
-                    )
-                    base = prev[0] if prev is not None else 0
-                    self.counts.updateValue((et,), (base + int(cnt),))
-            pairs = [
-                (key[0], k[0], v[0]) for k, v in self.counts.iterator()
-            ]
-            yield pd.DataFrame(
-                pairs, columns=["user_id", "event_type", "n"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    counts = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CountsProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-    name = "sink_" + uuid.uuid4().hex
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(F.col("n").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )

@@ -7,6 +7,7 @@ payloads in a tmp repo dir.
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import sys
@@ -69,3 +70,14 @@ def test_default_out_path_is_run_stamped_and_gitignored_dir(tmp_path):
     assert os.path.basename(p).startswith("bench_") and p.endswith(".json")
     # never the committed artifact
     assert "BENCH_LOCAL" not in p
+
+
+def test_default_cpus_falls_back_to_cpu_count(monkeypatch):
+    from spark_sql_dsv2_extension_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        assert importlib.reload(session).DEFAULT_CPUS == len(os.sched_getaffinity(0))
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)

@@ -7,9 +7,11 @@ Every registered key must carry an exact DuckDB oracle (enforced below).
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
-from spark_sql_dsv2_extension_spark.registry import REGISTRY, load_all
+from spark_sql_dsv2_extension_spark.registry import REGISTRY, load_all, query
 
 from .parity import compare
 
@@ -46,3 +48,9 @@ def test_oracle_keys_subset():
     # the driver sees keys in registration order
     assert list(q) == list(REGISTRY)
     assert len(q) == 462
+    # registered functions take exactly the QueryFn arguments: a tuning
+    # keyword would let a call disagree with its constant-built oracle
+    for k, spec in SPECS.items():
+        assert list(inspect.signature(spec.fn).parameters) == ["spark", "sf_dir"], k
+    with pytest.raises(TypeError):
+        query("k")
