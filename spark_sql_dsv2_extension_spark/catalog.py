@@ -44,8 +44,11 @@ from pyspark.sql.types import (
     ArrayType,
     MapType,
     NullType,
+    StructField,
     StructType,
 )
+
+from .sources.datasource import partition_dirs
 
 RESERVED_NAMESPACE_PROPS = frozenset({"location", "comment", "owner"})
 DEFAULT_NAMESPACE = "default"
@@ -354,13 +357,16 @@ class EngineCatalog:
 
     def load_table(self, ns: str, table: str) -> DataFrame:
         """Reference A3 loadTable — schema-on-write: reads use the declared
-        schema, not inference.
+        schema from the registry, never inference.
 
         Columns added or renamed after data landed (A6) are resolved here:
         files written before an add are missing the column (projected as
         typed NULL); files written before a rename carry the old physical
-        name (coalesced into the declared name). ``mergeSchema`` unions the
-        per-file parquet schemas so both generations are visible at once.
+        name (coalesced into the declared name). Parquet, orc and json
+        resolve file columns by name, so their read schema holds the
+        declared data columns, every old physical name (with the declared
+        type) and the partition columns; csv is positional and reads the
+        declared data columns only.
         """
         meta = self._table_meta(ns, table)
         path = self._table_dir(ns, table)
@@ -368,20 +374,20 @@ class EngineCatalog:
         data_fields = [
             f for f in struct.fields if f.name not in meta.partition_columns
         ]
-        def make_reader():
-            reader = self.spark.read.format(meta.provider)
-            if meta.provider == "csv":
-                # csv is positional under an explicit schema: renames are
-                # free, added trailing columns read as NULL from older files
-                ddl = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in data_fields
-                )
-                reader = reader.schema(ddl).option("header", "true")
-            elif meta.provider == "json":
-                pass  # inferred by name; declared-type cast happens below
-            else:
-                reader = reader.option("mergeSchema", "true")
-            return reader
+        reader = self.spark.read.format(meta.provider)
+        if meta.provider == "csv":
+            # renames are free, added trailing columns read as NULL from
+            # older files
+            reader = reader.schema(StructType(data_fields)).option("header", "true")
+        else:
+            by_name = {f.name: f for f in data_fields}
+            for f in data_fields:
+                phys = meta.physical_names.get(f.name, f.name)
+                by_name.setdefault(phys, StructField(phys, f.dataType))
+            reader = reader.schema(StructType([
+                *by_name.values(),
+                *(f for f in struct.fields if f.name in meta.partition_columns),
+            ]))
 
         def select_declared(df: DataFrame) -> DataFrame:
             # present columns in declared order, partition cols trailing
@@ -403,14 +409,14 @@ class EngineCatalog:
 
         parts: list[DataFrame] = []
         if _has_data_files(path):
-            parts.append(select_declared(make_reader().load(path)))
+            parts.append(select_declared(reader.load(path)))
         # custom-located partitions (A18/A24): read each registered dir and
         # attach the partition values as typed literals
         for key, loc in meta.partition_locations.items():
             if not _has_data_files(loc):
                 continue
             spec = dict(kv.split("=", 1) for kv in key.split("/"))
-            sub = make_reader().load(loc)
+            sub = reader.load(loc)
             for col, val in spec.items():
                 sub = sub.withColumn(col, F.lit(val))
             parts.append(select_declared(sub))
@@ -663,23 +669,10 @@ class EngineCatalog:
         meta = self._table_meta(ns, table)
         if not meta.partition_columns:
             return []
-        specs: list[dict[str, str]] = []
-        base = self._table_dir(ns, table)
-
-        def walk(d: str, depth: int, acc: dict[str, str]) -> None:
-            if depth == len(meta.partition_columns):
-                specs.append(dict(acc))
-                return
-            col = meta.partition_columns[depth]
-            if not os.path.isdir(d):
-                return
-            for entry in sorted(os.listdir(d)):
-                if entry.startswith(f"{col}="):
-                    acc[col] = entry.split("=", 1)[1]
-                    walk(os.path.join(d, entry), depth + 1, acc)
-                    acc.pop(col, None)
-
-        walk(base, 0, {})
+        specs = [
+            spec for _dir, spec in
+            partition_dirs(self._table_dir(ns, table), meta.partition_columns)
+        ]
         # custom-located partitions are not under the table dir — add them
         # from the registry (A18/A24)
         for key in meta.partition_locations:

@@ -44,9 +44,9 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.catalogImplementation", "in-memory")
-        # events.ts is parquet INT64 TIMESTAMP(NANOS) — Spark has no ns type;
-        # read as long and convert in tables.load (floor-to-µs, matching
-        # DuckDB's ns→µs truncation so oracle comparisons agree).
+        # older fixtures store events.ts as INT64 TIMESTAMP(NANOS) and Spark
+        # has no ns type: read it as a long (tables.py holds the rule and
+        # re-pins this conf on every fixture read).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

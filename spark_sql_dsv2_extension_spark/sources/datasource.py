@@ -27,6 +27,7 @@ zero.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -49,39 +50,34 @@ class _FileSplit(InputPartition):
     partition_values: dict  # partition column -> string value
 
 
-def _list_partition_files(
-    table_dir: str, partition_columns: list[str], prune: dict[str, str]
-) -> list[_FileSplit]:
-    """Directory-name partition pruning, then per-file splits.
+def partition_dirs(
+    table_dir: str, partition_columns: list[str], prune: dict[str, str] | None = None
+) -> Iterator[tuple[str, dict[str, str]]]:
+    """Every leaf ``col=value`` directory under ``table_dir`` with its
+    partition spec, in sorted order; an unpartitioned table is its own
+    single leaf.
 
-    Mirrors ExternalCatalogFileIndex.scala:41-76: the prune spec filters
-    partitions BEFORE any file listing, so a pruned read never stats
-    non-matching directories.
+    Mirrors ExternalCatalogFileIndex.scala:41-76: the ``prune`` spec
+    filters directory names BEFORE descending, so a pruned read never
+    lists non-matching partitions.
     """
-    splits: list[_FileSplit] = []
+    prune = prune or {}
 
-    def walk(d: str, depth: int, acc: dict[str, str]) -> None:
-        if depth == len(partition_columns):
-            if os.path.isdir(d):
-                for fn in sorted(os.listdir(d)):
-                    if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                        splits.append(_FileSplit(os.path.join(d, fn), dict(acc)))
+    def walk(d: str, spec: dict[str, str]) -> Iterator[tuple[str, dict[str, str]]]:
+        if len(spec) == len(partition_columns):
+            yield d, spec
             return
-        col = partition_columns[depth]
+        col = partition_columns[len(spec)]
         if not os.path.isdir(d):
             return
         for entry in sorted(os.listdir(d)):
             if not entry.startswith(f"{col}="):
                 continue
             value = entry.split("=", 1)[1]
-            if col in prune and prune[col] != value:
-                continue  # pruned: never descended into
-            acc[col] = value
-            walk(os.path.join(d, entry), depth + 1, acc)
-            acc.pop(col, None)
+            if prune.get(col, value) == value:
+                yield from walk(os.path.join(d, entry), {**spec, col: value})
 
-    walk(table_dir, 0, {})
-    return splits
+    return walk(table_dir, {})
 
 
 class EngineTableReader(DataSourceReader):
@@ -137,16 +133,16 @@ class EngineTableReader(DataSourceReader):
                 yield flt  # unsupported: Spark evaluates it post-scan
 
     def partitions(self) -> list[InputPartition]:
-        if not self.partition_columns:
-            splits: list[InputPartition] = [
-                _FileSplit(os.path.join(self.table_dir, fn), {})
-                for fn in sorted(os.listdir(self.table_dir))
-                if fn.endswith(".parquet") and not fn.startswith(("_", "."))
-            ]
-        else:
-            splits = _list_partition_files(
+        # one split per data file of every unpruned partition
+        splits = [
+            _FileSplit(os.path.join(d, fn), spec)
+            for d, spec in partition_dirs(
                 self.table_dir, self.partition_columns, self.prune
             )
+            if os.path.isdir(d)
+            for fn in sorted(os.listdir(d))
+            if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+        ]
         # An EMPTY table (a write that committed zero data files, or a
         # prune that eliminated every partition) must still present one
         # split: PySpark treats an empty partitions() list as "use the

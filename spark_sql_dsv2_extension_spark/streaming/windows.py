@@ -29,12 +29,14 @@ import shutil
 import tempfile
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from ..registry import query
-from ..tables import load, table_path
+from ..tables import file_schema, load, normalize_ts, table_path
 
 SENTINEL_USER = -1
 # Far-future sentinel event time (ns since epoch ≈ year 2096) — later than
@@ -62,75 +64,48 @@ _SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH") or (
 def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
-# Fixture-vintage adaptation: older driver fixtures store events.ts as
-# INT64 TIMESTAMP(NANOS) (read as a ns long under nanosAsLong), newer ones
-# as parquet timestamp[us] (read as TIMESTAMP_NTZ). One footer-only probe
-# per path decides which raw schema/sentinel/normalization to use; every
-# scratch file written below inherits the same raw type, so batch writes
-# and the stream reader always agree.
-_TS_LONG: dict[str, bool] = {}
 
-
-def _ts_is_long(sf_dir: str) -> bool:
-    path = table_path(sf_dir, "events")
-    if path not in _TS_LONG:
-        import pyarrow.parquet as pq
-        import pyarrow.types as pat
-
-        _TS_LONG[path] = pat.is_integer(pq.read_schema(path).field("ts").type)
-    return _TS_LONG[path]
-
-
-def _raw_schema(sf_dir: str) -> str:
-    ts_t = "BIGINT" if _ts_is_long(sf_dir) else "TIMESTAMP_NTZ"
-    return (
-        f"event_id BIGINT, ts {ts_t}, user_id BIGINT, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-
-
-def _sentinel_ts(sf_dir: str, off_ns: int = 0):
+def _sentinel_ts(raw: StructType, off_ns: int = 0):
     """Sentinel event time in the RAW column's own type (ns long or naive
-    datetime) so sentinel files bind to the same stream schema."""
+    datetime, see tables.file_schema) so sentinel files bind to the same
+    stream schema."""
     ns = SENTINEL_TS_NS + off_ns
-    if _ts_is_long(sf_dir):
+    if isinstance(raw["ts"].dataType, LongType):
         return ns
     return _EPOCH + _dt.timedelta(microseconds=ns // 1000)
 
 
-def _normalize_ts(df: DataFrame, sf_dir: str) -> DataFrame:
-    """Raw ts → µs TIMESTAMP, exactly like the batch path (tables.load):
-    ns long is floored to µs; TIMESTAMP_NTZ is reinterpreted as a UTC
-    instant (callers pin the session to UTC)."""
-    if _ts_is_long(sf_dir):
-        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _stream_source(spark: SparkSession, sf_dir: str, with_sentinel: bool = False):
+def _stream_source(
+    spark: SparkSession,
+    sf_dir: str,
+    sentinel_files: Sequence[Sequence[tuple[int, str, int]]] = (),
+) -> DataFrame:
     """Copy the events file into a scratch dir (file-stream sources read
-    directories) and open it as a stream; raw ts normalizes to a µs
-    timestamp exactly like the batch path (tables.load)."""
-    # defensive for harness-provided sessions (see tables.load): UTC keeps
-    # the NTZ→LTZ reinterpretation and epoch math oracle-identical, and
-    # nanosAsLong is required for ns-vintage fixtures (no-op otherwise)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    directories) and open it as a stream under its footer schema; raw ts
+    normalizes to a µs timestamp exactly like the batch path (tables.load).
+
+    Each entry of ``sentinel_files`` is appended as one more file of
+    far-future rows ``(event_id, event_type, off_ns)``: they advance the
+    watermark past all real data, so append mode emits every real
+    session/window before the query stops."""
+    path = table_path(sf_dir, "events")
+    raw = file_schema(spark, path)
     src_dir = _scratch_dir("engine_stream_")
-    shutil.copy(table_path(sf_dir, "events"), os.path.join(src_dir, "part-0.parquet"))
-    if with_sentinel:
-        # one far-future row: advances the watermark past all real data so
-        # append-mode emits every real session/window before the query stops
+    shutil.copy(path, os.path.join(src_dir, "part-0.parquet"))
+    for i, rows in enumerate(sentinel_files):
+        if i:
+            time.sleep(1.2)  # distinct mtimes => deterministic file order
         spark.createDataFrame(
-            [(-1, _sentinel_ts(sf_dir), SENTINEL_USER, "sentinel", 0.0, "{}")],
-            _raw_schema(sf_dir),
-        ).write.mode("append").parquet(src_dir)
-    raw = (
-        spark.readStream.schema(_raw_schema(sf_dir))
+            [(eid, _sentinel_ts(raw, off), SENTINEL_USER, etype, 0.0, "{}")
+             for eid, etype, off in rows],
+            raw,
+        ).coalesce(1).write.mode("append").parquet(src_dir)
+    stream = (
+        spark.readStream.schema(raw)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    return _normalize_ts(raw, sf_dir)
+    return normalize_ts(stream)
 
 
 def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -250,7 +225,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session windows (5-minute gap) per user, emitted in append
     mode once the watermark passes them (sentinel flush guarantees that for
     the bounded replay). Oracle = classic gaps-and-islands SQL."""
-    ev = _stream_source(spark, sf_dir, with_sentinel=True)
+    ev = _stream_source(spark, sf_dir, [[(-1, "sentinel", 0)]])
     agg = (
         ev.withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "5 minutes"), "user_id")
@@ -346,12 +321,8 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-1 state only where that state survived. The split threshold and
     the ms-granularity watermark are integer arithmetic so both engines
     compute them identically."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src_dir = _scratch_dir("engine_late_")
-    batch = spark.read.schema(_raw_schema(sf_dir)).parquet(
-        table_path(sf_dir, "events")
-    )
+    batch = load(spark, sf_dir, "events")
     bounds_us = _ts_bounds_us(table_path(sf_dir, "events"))
     if bounds_us is None:
         # empty source: no midpoint to split the two-batch replay on —
@@ -360,10 +331,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "window_start BIGINT, n BIGINT")
     lo_us, hi_us = bounds_us
     thr_us = lo_us + (hi_us - lo_us) // 2
-    if _ts_is_long(sf_dir):
-        ts_us = F.expr("ts DIV 1000")
-    else:
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts"))
     newest = batch.filter(ts_us >= thr_us)
     oldest = batch.filter(ts_us < thr_us)
     newest.coalesce(1).write.parquet(os.path.join(src_dir, "f1"))
@@ -372,13 +340,14 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(_one_file(src_dir, "f1"), (1_000_000, 1_000_000))
     os.utime(_one_file(src_dir, "f2"), (2_000_000, 2_000_000))
 
-    raw = (
-        spark.readStream.schema(_raw_schema(sf_dir))
+    # the split files hold the normalized batch, so the stream reads them
+    # under its schema as they are
+    ev = (
+        spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(src_dir)
     )
-    ev = _normalize_ts(raw, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes"))
@@ -426,31 +395,28 @@ def _ts_bounds_us(path: str) -> tuple[int, int] | None:
     statistics — metadata-only, no data scan. At 100 TB the previous
     ``agg(min, max).first()`` was a full extra pass over the input before the
     stream even started; footers answer the same question in O(#row groups)
-    bytes (the same stats Spark's own partition pruning reads). Raw stat
-    values are ns for INT64-ns-vintage fixtures, µs for timestamp[us].
+    bytes (the same stats Spark's own partition pruning reads). pyarrow
+    decodes the statistics by the column's timestamp unit, so ns and µs
+    files both come back as datetimes, floored to µs here like the batch
+    path.
 
     Returns None for an EMPTY source (zero row groups / no stats): there
     is no midpoint to split a replay on, and the caller short-circuits to
     its empty result instead of asserting (EMPTY_AUDIT_r9.md E5 — a
     harness-prep guard, not operator logic)."""
     import pyarrow.parquet as pq
-    import pyarrow.types as pat
 
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
+    md = pq.ParquetFile(path).metadata
     idx = md.schema.names.index("ts")
-    div = 1000 if pat.is_integer(pf.schema_arrow.field("ts").type) else 1
-    lo: int | None = None
-    hi: int | None = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or st.min_raw is None:
-            continue
-        lo = st.min_raw if lo is None else min(lo, st.min_raw)
-        hi = st.max_raw if hi is None else max(hi, st.max_raw)
-    if lo is None or hi is None:
+    stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
+    stats = [st for st in stats if st is not None and st.has_min_max]
+    if not stats:
         return None
-    return int(lo) // div, int(hi) // div
+
+    def us(v) -> int:  # UTC-adjusted columns decode tz-aware (in UTC)
+        return (v.replace(tzinfo=None) - _EPOCH) // _dt.timedelta(microseconds=1)
+
+    return us(min(st.min for st in stats)), us(max(st.max for st in stats))
 
 
 def _one_file(root: str, sub: str) -> str:
@@ -546,6 +512,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_table(joined, "append")
 
 
+# one click and one purchase per sentinel file, on both join sides
+_OUTER_SENTINELS = [
+    [(-1 - 10 * i, "click", off), (-2 - 10 * i, "purchase", off)]
+    for i, off in enumerate((0, 10**15))
+]
+
+
 @query(
     "stream_stream_left_outer",
     oracle="""
@@ -569,29 +542,11 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch LEFT JOIN. This is the sentinel idiom from
     ``stream_session_window`` extended to two inputs. State per side stays
     bounded by the watermark-plus-range horizon at any input rate."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = _scratch_dir("engine_stream_")
-    shutil.copy(table_path(sf_dir, "events"), os.path.join(src_dir, "part-0.parquet"))
     # Two sentinel files, strictly later mod-times: the watermark computed
     # from sentinel file N is *applied* while processing file N+1 (a
     # stopped availableNow replay gets no trailing no-data batch), so the
     # second file is what flushes every real outer row from state.
-    for i, off in enumerate((0, 10**15)):
-        spark.createDataFrame(
-            [
-                (-1 - 10 * i, _sentinel_ts(sf_dir, off), SENTINEL_USER, "click", 0.0, "{}"),
-                (-2 - 10 * i, _sentinel_ts(sf_dir, off), SENTINEL_USER, "purchase", 0.0, "{}"),
-            ],
-            _raw_schema(sf_dir),
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-        time.sleep(1.2)  # distinct mtimes => deterministic file order
-    raw = _normalize_ts(
-        spark.readStream.schema(_raw_schema(sf_dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir),
-        sf_dir,
-    )
+    raw = _stream_source(spark, sf_dir, _OUTER_SENTINELS)
     clicks = (
         raw.filter(F.col("event_type") == "click")
         .select("user_id", F.col("ts").alias("click_ts"))
@@ -652,25 +607,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink): pushed below the EventTimeWatermark node it would keep the
     sentinels from advancing the watermarks and strand the final ~2h of
     unmatched rows in state — the left_outer lesson, doubled."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = _scratch_dir("engine_stream_")
-    shutil.copy(table_path(sf_dir, "events"), os.path.join(src_dir, "part-0.parquet"))
-    for i, off in enumerate((0, 10**15)):
-        spark.createDataFrame(
-            [
-                (-1 - 10 * i, _sentinel_ts(sf_dir, off), SENTINEL_USER, "click", 0.0, "{}"),
-                (-2 - 10 * i, _sentinel_ts(sf_dir, off), SENTINEL_USER, "purchase", 0.0, "{}"),
-            ],
-            _raw_schema(sf_dir),
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-        time.sleep(1.2)  # distinct mtimes => deterministic file order
-    raw = _normalize_ts(
-        spark.readStream.schema(_raw_schema(sf_dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir),
-        sf_dir,
-    )
+    raw = _stream_source(spark, sf_dir, _OUTER_SENTINELS)
     clicks = (
         raw.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
@@ -757,9 +694,6 @@ def stream_sink_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
-
 @query(
     "stream_document_etl",
     oracle="""
@@ -780,12 +714,11 @@ def stream_document_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch transformation exactly, which is the oracle. At
     100 TB/day this scales with source parallelism; the gate prunes
     before any shuffle (there is none)."""
+    path = table_path(sf_dir, "documents")
     src_dir = _scratch_dir("engine_docstream_")
-    shutil.copy(
-        table_path(sf_dir, "documents"), os.path.join(src_dir, "part-0.parquet")
-    )
+    shutil.copy(path, os.path.join(src_dir, "part-0.parquet"))
     docs = (
-        spark.readStream.schema(_DOC_SCHEMA)
+        spark.readStream.schema(file_schema(spark, path))
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
@@ -818,21 +751,18 @@ def stream_restart_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-submitted job never double-counts a shard); checkpoint + file-sink
     manifest play the reference's metastore⊕staging two-phase roles
     (HiveFileBatchWrite.scala:20-69)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src_dir = _scratch_dir("engine_restart_src_")
     root = _scratch_dir("engine_restart_")
     out, chk = os.path.join(root, "data"), os.path.join(root, "chk")
 
-    batch = spark.read.schema(_raw_schema(sf_dir)).parquet(
-        table_path(sf_dir, "events")
-    )
+    batch = load(spark, sf_dir, "events")
     half1 = batch.filter(F.col("event_id") % 2 == 0)
     half2 = batch.filter(F.col("event_id") % 2 == 1)
     half1.coalesce(1).write.parquet(os.path.join(src_dir, "f1"))
 
     def run_once():
         stream = (
-            spark.readStream.schema(_raw_schema(sf_dir))
+            spark.readStream.schema(batch.schema)
             .option("recursiveFileLookup", "true")
             .parquet(src_dir)
         )
@@ -909,13 +839,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit, where the divergence was fixture scale, not NULL semantics).
     The batch function does a distributed write only — nothing
     driver-side."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src_dir = _scratch_dir("engine_feb_src_")
     out_dir = _scratch_dir("engine_feb_out_")
 
-    batch = spark.read.schema(_raw_schema(sf_dir)).parquet(
-        table_path(sf_dir, "events")
-    )
+    batch = load(spark, sf_dir, "events")
     batch.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
         os.path.join(src_dir, "f1")
     )
@@ -923,7 +850,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(src_dir, "f2")
     )
     stream = (
-        spark.readStream.schema(_raw_schema(sf_dir))
+        spark.readStream.schema(batch.schema)
         .option("recursiveFileLookup", "true")
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
@@ -974,7 +901,7 @@ def stream_chained_dedup_daily_active(spark: SparkSession, sf_dir: str) -> DataF
     per open window — the minimal state any exact streaming DAU needs;
     both operators key their shuffles identically so the chain adds no
     extra exchange. The batch twin is ext_sliding_active_users."""
-    ev = _stream_source(spark, sf_dir, with_sentinel=True)
+    ev = _stream_source(spark, sf_dir, [[(-1, "sentinel", 0)]])
     dedup = (
         ev.withWatermark("ts", "1 day")
         .select("user_id", F.window("ts", "1 day").alias("w"))

@@ -16,8 +16,12 @@ mirrors it textually.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -33,42 +37,86 @@ TABLE_NAMES = (
 )
 
 
+# footer key under which Spark's parquet writer stores the Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table (columnar parquet scan; Catalyst prunes
-    columns/filters — the vectorized equivalent of the reference's
-    row-at-a-time SerDe reader, HiveFilePartitionReaderFactory.scala:57-64).
+def file_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's read schema for one parquet table, taken from its footer.
 
-    ``events.ts`` normalizes to a µs TIMESTAMP regardless of fixture
-    vintage: older driver fixtures store INT64 TIMESTAMP(NANOS) (arrives as
-    a ns long under ``nanosAsLong`` and is floored to µs — the same
-    truncation DuckDB applies), newer ones store parquet timestamp[us]
-    (arrives as TIMESTAMP_NTZ and is reinterpreted as a UTC instant).
-    Either way downstream operators and the DuckDB oracle see identical µs
-    wall-clock values. Integer division (``DIV``) is deliberate on the ns
-    path: ns epochs (~1.7e18) exceed double's exact-integer range.
+    ``path`` is one file, or a directory of part files written by Spark
+    (one footer stands for all, as in Spark's own non-merging inference).
+    This is the engine's only source of fixture schemas: no read infers
+    one (inference is a Spark job per read), and nothing is cached, so a
+    rewritten file is seen on the next call. Types are exactly what Spark
+    infers for the same file: the Spark schema a Spark writer stored in
+    the footer, else the converted parquet schema, where INT64
+    TIMESTAMP(NANOS) columns are ``LongType``, the ns value Spark returns
+    under ``nanosAsLong`` (it has no ns timestamp type).
+
+    Pins the two session confs every fixture read depends on, because the
+    caller may hand over a session built without them: UTC keeps
+    timestamp rendering and epoch math identical to the timezone-naive
+    DuckDB oracle, and ``nanosAsLong`` lets Spark 4 read ns columns at all
+    (PARQUET_TYPE_ILLEGAL otherwise; a no-op for other files).
     """
-    # Defensive session confs: the harness may hand us a session built
-    # without them. Both are dynamically settable. UTC keeps timestamp
-    # rendering/epoch math identical to the (timezone-naive) DuckDB oracle;
-    # nanosAsLong is required or Spark 4 refuses INT64 TIMESTAMP(NANOS)
-    # parquet columns (PARQUET_TYPE_ILLEGAL) — a no-op on µs fixtures.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        ts_type = df.schema["ts"].dataType.simpleString()
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_type == "timestamp_ntz":
-            # NTZ→LTZ under the UTC session above: wall clock == instant,
-            # matching both the ns path and DuckDB's naive-timestamp view.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if os.path.isdir(path):
+        path = min(
+            os.path.join(path, f) for f in os.listdir(path)
+            if not f.startswith(("_", "."))
+        )
+    footer = pq.read_schema(path)
+    spark_schema = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is not None:
+        return StructType.fromJson(json.loads(spark_schema))
+    arrow = pa.schema([
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+        for f in footer
+    ])
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """The ``events.ts`` vintage rule: the raw column becomes a µs TIMESTAMP.
+
+    Older fixtures store INT64 TIMESTAMP(NANOS), which arrives as a ns
+    long (:func:`file_schema`) and is floored to µs, the truncation DuckDB
+    applies; integer ``DIV`` because ns epochs (~1.7e18) exceed double's
+    exact-integer range. Newer fixtures store timestamp[us], which arrives
+    as TIMESTAMP_NTZ and is reinterpreted as a UTC instant (wall clock ==
+    instant under the UTC session). Either way downstream operators and
+    the oracle see identical µs values. Works on batch and stream frames.
+    """
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table: a columnar parquet scan under the schema
+    from the file's footer (:func:`file_schema`), so building the
+    DataFrame runs no Spark job. Catalyst prunes columns and filters — the
+    vectorized equivalent of the reference's row-at-a-time SerDe reader
+    (HiveFilePartitionReaderFactory.scala:57-64). ``events`` goes through
+    :func:`normalize_ts`.
+    """
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(file_schema(spark, path)).parquet(path)
+    return normalize_ts(df) if name == "events" else df
 
 
 def fan_out(df: DataFrame) -> DataFrame:

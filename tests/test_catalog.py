@@ -146,10 +146,12 @@ def test_catalog_isolation(spark, tmp_path):
 # -- round-2 additions: A4/A6/A22/A26 + SQL addressing ----------------------
 
 
-def test_alter_table_full_surface(cat, spark):
+@pytest.mark.parametrize("provider", ["parquet", "orc", "json"])
+def test_alter_table_full_surface(cat, spark, provider):
     """A6 (V2ExternalCatalog.scala:204-234): properties, schema add/rename,
-    comment, owner, location — with data re-read after each schema change."""
-    cat.create_table("default", "t6", "id BIGINT, name STRING")
+    comment, owner, location — with data re-read after each schema change,
+    for every provider that resolves file columns by name."""
+    cat.create_table("default", "t6", "id BIGINT, name STRING", provider=provider)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id BIGINT, name STRING")
     cat.insert("default", "t6", df)
 
