@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quantiles import distributed_ntile
 from ..registry import query
-from ..tables import fan_out, load
+from ..tables import load
 
 _DSIR_TOP = 100
 
@@ -69,7 +69,7 @@ def ext_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two vocab aggregations + one fact join (vocab broadcast here,
     shuffle at web scale); selection is a single top-N. The n-gram-hash
     feature space of the paper swaps in for words with no shape change."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -352,7 +352,7 @@ def ext_sentence_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure per-row explode — no shuffle at all; output order is
     (doc_id, sent_idx), reconstructible downstream."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -417,7 +417,7 @@ def ext_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one bigram count (the only token-stream shuffle) and two
     aggregations OVER the bigram-type table (much smaller); type-table
     statistics broadcast back. Higher orders chain the same shape."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.split("text", " ").alias("toks"))
     # Adjacent pairs via two aligned slices zipped — NOT
     # sequence(1, size-1) + element_at: on a single-token document that
@@ -651,7 +651,7 @@ def ext_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the table is vocabulary-sized (shuffle on token), the
     normalizer is a 1-row broadcast — the sampler itself then consumes
     the cumulative table via binary search, off-engine."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     c = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)

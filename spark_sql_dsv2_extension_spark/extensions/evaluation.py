@@ -2095,7 +2095,7 @@ def ext_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: term stats shrink to ({DELTA_TOP_TERMS} terms × #sources)
     immediately after one corpus-wide count; every join after that is
     broadcast-sized."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("w")).filter(
         F.length("w") > 0
     )
@@ -3098,7 +3098,7 @@ def ext_ablation_leave_one_source(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: distinct (source, word) pairs shuffle once; everything after
     is vocabulary-sized. S never multiplies the corpus passes."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = (
         docs.select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
@@ -5466,7 +5466,7 @@ def ext_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     len = EMB_DIM gate removes the broken encode from the sample
     instead, the same choice the retrieval family's scorable gate
     makes. NULL embeddings (len NULL) leave under the same condition."""
-    emb = fan_out(load(spark, sf_dir, "embeddings")).filter(
+    emb = load(spark, sf_dir, "embeddings").filter(
         F.size("embedding") == _EMB_DIM
     )
     x = emb.filter(F.col("label") == 0).select(

@@ -26,6 +26,7 @@ touch the payload column thanks to parquet column pruning.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, scratch_dir
 
 
 @query(
@@ -323,13 +324,8 @@ def ext_multimodal_meta_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The plan audit pins `payload` out of ReadSchema; byte size
     is carried as a metadata column (n_bytes) written at ingest, the
     standard trick so even SUM(bytes) needs no payload access."""
-    import os
-    import tempfile
-
     docs = load(spark, sf_dir, "documents")
-    asset_dir = os.path.join(
-        tempfile.mkdtemp(prefix="engine_mm_assets_"), "assets"
-    )
+    asset_dir = os.path.join(scratch_dir("mm_assets"), "assets")
     # ingest: payload + typed metadata (incl. its byte length) in one table
     docs.select(
         "doc_id",

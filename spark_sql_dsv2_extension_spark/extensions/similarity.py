@@ -656,7 +656,7 @@ def ext_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the cell id — a query touches |corpus|/K vectors (nprobe=1;
     production raises nprobe by joining the q-side to its p nearest cells
     — same join, more rows on the tiny side)."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     _, cent = train_kmeans(emb)
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("sqd").asc(), F.col("cid").asc()
@@ -880,7 +880,7 @@ def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The kept flag is a left-semi-negation expressed as an aggregate, all
     plan-side; exact oracle because both kmeans and cosine are
     bit-identical sequential folds."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     _, cent = train_kmeans(emb)
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("sqd").asc(), F.col("cid").asc()
@@ -1019,7 +1019,7 @@ def ext_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     so results are partition-order-independent and bit-exact. Shuffles:
     explode → (label, dim) centroid agg → join back → per-vector agg →
     per-label agg; every aggregate partial-combines map-side."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     comp = emb.select(
         "vec_id",
         "label",
@@ -2170,7 +2170,7 @@ def ext_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle carries (label × dim) partial sums, never the vectors.
     The float→int scaling is what makes the result mergeable without
     float-order divergence — the same trick as tables.dsum."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     comp = emb.select(
         "label",
         F.posexplode("embedding").alias("pos", "x"),
@@ -2614,7 +2614,7 @@ def ext_embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     back), then a map-side transform of every vector; this is the
     column-statistics + broadcast-normalize shape of every feature
     scaler."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     comp = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "x")
     ).select(
@@ -2694,7 +2694,7 @@ def ext_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (label, dim)-grouped integer aggregate over the exploded
     components (the corpus pass), then label²-sized pair arithmetic —
     broadcast territory for any real label count."""
-    emb = fan_out(_emb_nonnull(spark, sf_dir)).filter(
+    emb = _emb_nonnull(spark, sf_dir).filter(
         (F.col("label") < 5) & (F.size("embedding") == EMB_DIM)
     )
     dims = emb.select(
@@ -3533,7 +3533,7 @@ def ext_mips_cosine_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the 16-query × corpus score pass is the declared bounded
     brute-force base (swap: the LSH/IVF candidate generator); the
     per-query top-5 windows are partitioned by query_id."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
     norms = emb.select(
         "vec_id",
         "embedding",
@@ -3653,7 +3653,7 @@ def ext_random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     be exactly EMB_DIM wide — an EXPLICIT size filter, not reliance on
     zip_with NULL-padding (which would silently keep a same-width
     ragged pair the oracle's len = EMB_DIM gate drops)."""
-    emb = fan_out(load(spark, sf_dir, "embeddings")).filter(
+    emb = load(spark, sf_dir, "embeddings").filter(
         F.size("embedding") == EMB_DIM
     )
     a = emb.filter(F.col("vec_id") < 50).select(
@@ -4028,11 +4028,11 @@ def ext_mrl_truncation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied per truncation.
 
     Scale: per dim this is the brute-force exactness baseline (broadcast
-    queries × corpus, one pass per dim over the fanned-out corpus); at
+    queries × corpus, one pass per dim over the corpus); at
     production scale each dim's ranking swaps for the LSH/IVF path and
     the recall join shape is unchanged — the point of the key is the
     EVALUATION, whose cost is (queries × k × dims) rows."""
-    emb = fan_out(_emb_scorable(spark, sf_dir))
+    emb = _emb_scorable(spark, sf_dir)
 
     def topk(dim):
         e = emb.select(
@@ -4182,7 +4182,7 @@ def ext_knn_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     which raises INVALID_ARRAY_INDEX under ANSI on a ragged scorable
     embedding while the oracle's OOB index yields NULL bits — both sides
     exclude len < 64 vectors via the same size condition."""
-    emb = fan_out(_emb_scorable(spark, sf_dir)).filter(
+    emb = _emb_scorable(spark, sf_dir).filter(
         F.size("embedding") >= _HAM_BITS
     )
 

@@ -115,7 +115,7 @@ def ext_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is a 64-row shuffle, vs count(DISTINCT) moving every unique
     token. Error ~1.04/sqrt(64) ≈ 13% — the fixed price of fixed memory,
     reported per row as rel_err against the exact count."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     # Lazy localCheckpoint (r16): words is the per-source VOCABULARY —
     # tiny (sources × distinct tokens) relative to the token stream that
     # produces it — with THREE consumers below (the sketch hash, the
@@ -232,7 +232,7 @@ def ext_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass and merged by cell-wise sum (the groupBy here IS that merge).
     The estimate join touches only the candidate set (top-{_CMS_TOP}
     exact, for measurement) against 512 broadcast cells."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     # token-level filter matches the oracle's length(w) > 0 exactly —
     # consecutive/leading/trailing spaces split into '' tokens that must
     # not reach the sketch (a doc-level text filter would miss them)

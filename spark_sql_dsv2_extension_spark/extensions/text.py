@@ -63,14 +63,9 @@ def ext_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus profile per (lang, source): doc/token/char counts, and a
     cross-check that the precomputed n_chars column equals length(text).
 
-    No fan_out (r17): the per-row work here is trivial (split-size,
-    length) and the groupBy map-side-aggregates to ~|lang × source| rows,
-    so the round-robin exchange of the corpus TEXT (plus its
-    sort-before-repartition) was the key's dominant cost — exactly the
-    "keep it OFF simple scan/agg paths" case fan_out's own contract
-    names. Measured at sf0.1: 0.61→0.33 s at 32 cores AND 0.47→0.36 s at
-    8 (the r16 scaling ratio 0.56 was this exchange); at 100 TB the scan
-    has natural splits and the removed exchange is corpus-sized."""
+    No fan_out: the per-row work is trivial (split-size, length) and the
+    groupBy map-side-aggregates to ~|lang × source| rows, so a round-robin
+    exchange of the corpus text would be the key's dominant cost."""
     docs = load(spark, sf_dir, "documents")
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -99,7 +94,7 @@ def ext_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split, and a BPE-ish regex
     (alpha runs | digit runs | single punctuation) — the usual cheap proxy
     for tokenizer budgeting before the real tokenizer runs."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     bpe_re = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
     return docs.select(
         "doc_id",
@@ -264,8 +259,7 @@ def ext_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-audited at test scale) and degrades to a shuffle join above
     it — the only join strategy that is safe at both ends."""
     docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()  # scalar dimension, embedded as a literal (pre-fan_out:
-    docs = fan_out(docs)   # the count is metadata-cheap on the raw scan)
+    n_docs = docs.count()  # scalar dimension, embedded as a literal
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     # df derived FROM tf (r16): tf already holds one row per distinct
     # (doc_id, term), so count-per-term over it equals
@@ -670,7 +664,7 @@ def ext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: tf is a map-side-combining aggregate over the token
     explode; df and the corpus stats are scalar broadcasts; no cross join
     of anything large."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     # dl leaf (r17): consumed by stats AND the scored join — without it
     # each consumer re-scans + re-splits the corpus text. One row per doc
@@ -904,7 +898,7 @@ def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split/slice/explode), no Python, so at 100 TB this runs at scan
     throughput and the output is ~n_tokens/STRIDE rows per doc.
     """
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_chunks = F.lit(1) + F.floor(
         (F.greatest(F.size(toks) - F.lit(CHUNK_SIZE), F.lit(0)) + F.lit(CHUNK_STRIDE - 1))
@@ -1156,7 +1150,7 @@ def ext_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor division — the sibling bigram key hit an exact half boundary
     in the old ``round(sum/1e6/n, 4)`` at sf0.1 where the engines'
     double rounding disagrees (round-8 sweep); same guard here."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c")).cache()
     total = vocab.agg(F.sum("c").alias("n"))
@@ -1292,7 +1286,7 @@ def ext_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-decimal rounding). The support floor keeps the output set integer-
     deterministic. Plan: two grouped counts + two broadcast joins of the
     unigram vocabulary back onto bigrams."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.split("text", " ").alias("toks"))
     uni = toks.select(F.explode("toks").alias("w"))
     uc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c")).cache()
@@ -1488,7 +1482,7 @@ def ext_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates ((source, term) counts, then per-source rollup); both are
     partial-aggregated map-side, and the shuffle carries term counts, not
     text. Integer counts with two final divisions — exact."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
     tc = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     return tc.groupBy("source").agg(
@@ -1537,7 +1531,7 @@ def ext_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one final division — exact."""
     from pyspark.sql.window import Window
 
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # top-VOCAB_SIZE via orderBy+limit (TakeOrderedAndProject: per-
@@ -1597,7 +1591,7 @@ def ext_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast partition prefix-counts), phase via closed-form
     ``ntile_from_rank`` — no single-task global sort; per-doc scoring
     stays fully parallel."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     words = F.split("text", " ")
     scored = docs.select(
         "doc_id",
@@ -1868,7 +1862,7 @@ def ext_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-side explode + sum instead of a corpus re-scan (the standard
     word-counts optimization in BPE trainers). Top-20 with deterministic
     count-desc/pair-asc order."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split("text", " ")).alias("w")).filter(
         F.length("w") >= 2
     )
@@ -2070,7 +2064,7 @@ def ext_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at web scale); the tercile is one window per language — at
     100 TB replace ntile with per-language approx quantile CUTS computed
     once and joined back, same output contract, no global sort."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("n"))
@@ -2149,7 +2143,7 @@ def ext_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass, one 1-row aggregate, 4 output rows. The same flags
     feed ext_corpus_pipeline's gate; this key is the report beside it."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     n_tokens = F.when(F.length("text") == 0, F.lit(0)).otherwise(
         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
         + 1
@@ -2232,7 +2226,7 @@ def ext_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan + one grouped count; the lexicon lives in the
     expression (no join). A 10k-word production lexicon becomes a
     broadcast map lookup, same single-pass plan."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("w")
     )
@@ -2289,11 +2283,9 @@ def ext_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local after one shuffle on doc_id; no cross-document state
     at all.
 
-    No fan_out (r17): the sentence split is cheap and the very next
-    operator is a (doc_id, sentence) shuffle anyway, so the extra
-    round-robin exchange of the text only ADDED a full-width pass.
-    Measured at sf0.1: 0.62→0.33 s at 32 cores, 0.36→0.35 s at 8 (the
-    r16 scaling ratio 0.67 was this exchange)."""
+    No fan_out: the sentence split is cheap and the very next operator
+    is a (doc_id, sentence) shuffle anyway, so a round-robin exchange of
+    the text would only add a full-width pass."""
     docs = load(spark, sf_dir, "documents")
     s = docs.select(
         "doc_id",
@@ -2698,7 +2690,7 @@ def ext_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary is Heaps-sublinear but unbounded — no single-task sort),
     one scalar aggregate — the regression never materializes anything
     but five numbers."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     c = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
@@ -2881,7 +2873,7 @@ def ext_boilerplate_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair), then one count per sentence and a top-k (TakeOrdered, not a
     global sort). At 100 TB, swap the raw sentence for its xxhash64 in
     the shuffle and join the winning hashes back for display."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     s = (
         docs.select(
             "doc_id", F.explode(F.split("text", "\\. ")).alias("sentence")
@@ -2942,7 +2934,7 @@ def ext_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag is deterministic.
 
     Scale: pure map-side row arithmetic, no shuffle at all."""
-    docs = fan_out(load(spark, sf_dir, "documents")).filter(F.length("text") > 0)
+    docs = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
     n = F.length("text").cast("long")
     n_sym = (
         F.length("text")
@@ -2996,7 +2988,7 @@ def ext_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side only — two splits and one regexp scan per row, no
     shuffle."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     words = F.size(
         F.filter(F.split("text", " "), lambda w: F.length(w) > 0)
     ).cast("long")
@@ -3060,7 +3052,7 @@ def ext_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index wants; collect_list of ids (not text) bounds memory per term,
     and a production build would write per-term postings as the
     partitioned sink rather than stringify them."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     t = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.length("term") > 0)
@@ -3128,7 +3120,7 @@ def ext_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the merge applies over distinct words with counts (vocabulary-
     sized), the winning pair arrives as a 1-row broadcast, and the report
     is a top-k."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split("text", " ")).alias("w")).filter(
         F.length("w") >= 2
     )
@@ -3273,7 +3265,7 @@ def ext_holdout_lm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the LM is vocabulary-sized (broadcast back); both splits come
     from ONE corpus scan, and scoring is an equi-join on token."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     split = docs.select(
         "doc_id",
         "text",
@@ -3358,7 +3350,7 @@ def ext_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     each word contributes its source-pair combinations, which is the
     inverted-index formulation (never a source×source×vocab blowup;
     sources-per-word is the bounded quantity)."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     v = (
         docs.select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
@@ -3605,7 +3597,7 @@ def ext_extractive_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents), so the whole computation is embarrassingly parallel
     after one doc-keyed shuffle; the per-doc rank window partitions by
     doc_id."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     sent = docs.select(
         "doc_id",
         F.posexplode(F.split("text", "\\. ")).alias("idx0", "sentence"),
@@ -3709,7 +3701,7 @@ def ext_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL last in Spark, but with <= 20 distinct tokens the LIMIT keeps
     every row, so the sorted-row SET still matches —
     DEGENERATE_AUDIT_r8.md Family B, oracle untouched)."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
         F.explode(F.split("text", " ")).alias("w"),
@@ -3796,7 +3788,7 @@ def ext_log_odds_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles and the result is micro-rounded (the DSIR idiom — the 1-ulp
     libm risk is confined to a measure-zero .5 boundary). Scale: one token
     explode feeding three vocabulary-sized aggregates."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -3933,7 +3925,7 @@ def ext_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the vocabulary aggregate is the only corpus-sized pass; the
     curve itself is a broadcast of |vocab| rows crossed with 3 constants."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("w")).filter(
         F.length("w") > 0
     )
@@ -4170,7 +4162,7 @@ def ext_bpe_train_k_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     words pair-split identically (both substring in codepoints); the
     chr(1..3) merge symbols survive later rounds' pair extraction
     identically on both engines."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
+    docs = load(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") >= 2)

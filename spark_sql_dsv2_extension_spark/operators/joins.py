@@ -14,17 +14,12 @@ physical strategy. Scale posture per key:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import dsum, load, sql_dsum
-
-
-def _bucket_scratch() -> str:
-    return tempfile.mkdtemp(prefix="engine_bucketed_")
+from ..tables import dsum, load, scratch_dir, sql_dsum
 
 
 def flagship_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,7 +368,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests/test_plans.py). Bucket count 8 fits the fixture; a
     real deployment sizes buckets so each is one HDFS-block-ish file.
     """
-    scratch = _bucket_scratch()
+    scratch = scratch_dir("bucketed")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     (
@@ -486,12 +481,7 @@ def join_dpp_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions' files. This is THE mechanism that makes star joins viable
     on 100 TB partitioned facts (only matching date/status partitions are
     read); asserted in tests/test_plans.py."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="engine_dpp_"), "orders"
-    )
+    out = os.path.join(scratch_dir("dpp"), "orders")
     facts = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )

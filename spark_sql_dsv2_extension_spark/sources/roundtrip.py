@@ -18,17 +18,12 @@ natively).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import SQL_PROPS_JSON, load
-
-
-def _scratch(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"engine_{tag}_")
+from ..tables import SQL_PROPS_JSON, load, scratch_dir
 
 
 @query(
@@ -41,7 +36,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write → schema'd read-back (reference A22 CsvProviderFileWriteBuilder;
     atomic types only, matching its validator CsvProviderFileWriteBuilder.scala:47-51).
     Doubles survive because Spark writes shortest-round-trip decimal text."""
-    out = os.path.join(_scratch("csv"), "customer")
+    out = os.path.join(scratch_dir("csv"), "customer")
     (
         load(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
@@ -65,7 +60,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON write → schema'd read-back (reference A22 JsonProviderFileWriteBuilder;
     nested types allowed per its validator — the struct column exercises that)."""
-    out = os.path.join(_scratch("json"), "events")
+    out = os.path.join(scratch_dir("json"), "events")
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -101,7 +96,7 @@ def scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (EMPTY_AUDIT_r9.md E1) — with explicit schema the empty round-trip
     reads back as an empty frame, and on non-empty data the schema is a
     no-op that additionally skips footer-sampling inference."""
-    out = os.path.join(_scratch("prune"), "lineitem")
+    out = os.path.join(scratch_dir("prune"), "lineitem")
     df = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -130,7 +125,7 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .datasource import register
 
-    out = os.path.join(_scratch("pyds"), "lineitem")
+    out = os.path.join(scratch_dir("pyds"), "lineitem")
     (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_quantity", "l_returnflag")
@@ -164,7 +159,7 @@ def sink_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite ONLY the 'O' partition with doubled prices. The read-back
     equals base data for untouched partitions + patched data for 'O' —
     exactly the reference's two-phase commit semantics, minus the metastore."""
-    out = os.path.join(_scratch("dyn"), "orders")
+    out = os.path.join(scratch_dir("dyn"), "orders")
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -195,7 +190,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     HiveFileFormatWriteBuilder.scala:208-223); Spark's native ORC sink
     replaces that plumbing with a columnar writer. Round-trip against the
     original table proves writer and reader jointly."""
-    out = os.path.join(_scratch("orc"), "part")
+    out = os.path.join(scratch_dir("orc"), "part")
     (
         load(spark, sf_dir, "part")
         .select("p_partkey", "p_name", "p_brand", "p_retailprice")
@@ -226,7 +221,7 @@ def sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     of partition pruning: the reference gets it from HMS-registered
     partitions (ExternalCatalogFileIndex.scala:41-76); columnar engines get
     the same effect from sorted file layout + footer stats."""
-    out = os.path.join(_scratch("sorted"), "orders")
+    out = os.path.join(scratch_dir("sorted"), "orders")
     (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -281,7 +276,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     a CDC batch touches (Delta/Iceberg MERGE does the same dance with a
     transaction log on top).
     """
-    out = os.path.join(_scratch("merge"), "orders")
+    out = os.path.join(scratch_dir("merge"), "orders")
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -355,7 +350,7 @@ def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — at 100 TB a single rotted object no longer kills the job. Set
     per-read via option, not session conf, so it works in any harness
     session."""
-    out = os.path.join(_scratch("corrupt"), "nation")
+    out = os.path.join(scratch_dir("corrupt"), "nation")
     load(spark, sf_dir, "nation").select("n_nationkey", "n_name").write.mode(
         "overwrite"
     ).parquet(out)
@@ -385,7 +380,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (EMPTY_AUDIT_r9.md E1); a no-op on non-empty data."""
     from .datasource import register
 
-    out = os.path.join(_scratch("pyds_w"), "supplier")
+    out = os.path.join(scratch_dir("pyds_w"), "supplier")
     os.makedirs(out, exist_ok=True)
     register(spark)
     df = load(spark, sf_dir, "supplier").select(
@@ -484,7 +479,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     an empty source round-trips as an empty frame instead of failing
     inference (EMPTY_AUDIT_r9.md E1)."""
     ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    root = _scratch("compact")
+    root = scratch_dir("compact")
     small, compact = os.path.join(root, "small"), os.path.join(root, "compact")
     # simulate fragmented ingest: ~16 files per day partition
     ev.repartition(16).write.partitionBy("day").parquet(small)
@@ -558,7 +553,7 @@ def sink_compression_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_retailprice"
     )
-    paths = write_compressed(base, _scratch("compress"))
+    paths = write_compressed(base, scratch_dir("compress"))
     parts = [
         spark.read.schema(base.schema).parquet(paths["parquet"]),
         spark.read.schema(base.schema)
@@ -595,7 +590,7 @@ def scan_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    out = os.path.join(_scratch("pystream"), "events")
+    out = os.path.join(scratch_dir("pystream"), "events")
     ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(out)
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
         "append"
@@ -637,7 +632,7 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines — a line-oriented format has no NULL representation
     (Spark's text sink would silently round-trip NULL as an empty
     line), so the sink contract is stated explicitly."""
-    out = os.path.join(_scratch("text"), "documents")
+    out = os.path.join(scratch_dir("text"), "documents")
     (
         load(spark, sf_dir, "documents")
         .select("text")
@@ -664,7 +659,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     96-107) parses every valid row and captures the bad line in the
     _corrupt_record column instead of failing the task — at 100 TB one
     truncated record must cost one row, not a 10k-task job retry."""
-    out = os.path.join(_scratch("csvbad"), "nation")
+    out = os.path.join(scratch_dir("csvbad"), "nation")
     (
         load(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name")
@@ -715,7 +710,7 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     reader primitive). At 100 TB mergeSchema costs a footer read per file
     — production pins the schema in a catalog instead, exactly what
     ``EngineCatalog.load_table`` does."""
-    out = os.path.join(_scratch("evolve"), "supplier")
+    out = os.path.join(scratch_dir("evolve"), "supplier")
     s = load(spark, sf_dir, "supplier")
     s.filter(F.col("s_suppkey") % 2 == 0).select("s_suppkey", "s_name").write.parquet(
         out
@@ -751,13 +746,13 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src = os.path.join(_scratch("pystreamsink"), "src")
+    src = os.path.join(scratch_dir("pystreamsink"), "src")
     ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    out = os.path.join(_scratch("pystreamsink"), "out")
-    chk = os.path.join(_scratch("pystreamsink"), "chk_" + _uuid.uuid4().hex)
+    out = os.path.join(scratch_dir("pystreamsink"), "out")
+    chk = os.path.join(scratch_dir("pystreamsink"), "chk_" + _uuid.uuid4().hex)
     register(spark)
     stream = (
         spark.readStream.schema(
@@ -806,7 +801,7 @@ def scan_union_multiformat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 10000).cast("long").alias("v4"),
     )
-    root = _scratch("multifmt")
+    root = scratch_dir("multifmt")
     pq_dir = os.path.join(root, "pq")
     csv_dir = os.path.join(root, "csv")
     json_dir = os.path.join(root, "json")
@@ -850,7 +845,7 @@ def scan_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFra
     them post-scan, so semantics never depend on reader completeness."""
     from .datasource import register
 
-    out = os.path.join(_scratch("pyds_push"), "lineitem")
+    out = os.path.join(scratch_dir("pyds_push"), "lineitem")
     (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_quantity", "l_returnflag")

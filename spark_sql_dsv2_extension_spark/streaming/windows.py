@@ -26,7 +26,6 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import shutil
-import tempfile
 import time
 import uuid
 from collections.abc import Sequence
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
 from ..registry import query
-from ..tables import file_schema, load, normalize_ts, table_path
+from ..tables import file_schema, load, normalize_ts, scratch_dir, table_path
 
 SENTINEL_USER = -1
 # Far-future sentinel event time (ns since epoch ≈ year 2096) — later than
@@ -47,22 +46,6 @@ SENTINEL_USER = -1
 SENTINEL_TS_NS = 4_000_000_000 * 10**9
 
 _EPOCH = _dt.datetime(1970, 1, 1)
-
-# Ephemeral stream scratch (r16): the file-stream source dirs, sink dirs
-# and checkpoint dirs built here hold a copied fixture plus the throwaway
-# state of a bounded availableNow replay — nothing durable. Put them on a
-# memory-backed filesystem when one exists so per-micro-batch state-store
-# and commit-log fsyncs don't pay rotating/virtualized-disk latency.
-# Override with $SPARK_GRAFT_STREAM_SCRATCH; production streams with
-# durability requirements keep their checkpoints on durable storage (this
-# helper is only used by the ephemeral verification replays).
-_SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH") or (
-    "/dev/shm" if os.path.isdir("/dev/shm") else None
-)
-
-
-def _scratch_dir(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def _sentinel_ts(raw: StructType, off_ns: int = 0):
@@ -90,7 +73,7 @@ def _stream_source(
     session/window before the query stops."""
     path = table_path(sf_dir, "events")
     raw = file_schema(spark, path)
-    src_dir = _scratch_dir("engine_stream_")
+    src_dir = scratch_dir("stream")
     shutil.copy(path, os.path.join(src_dir, "part-0.parquet"))
     for i, rows in enumerate(sentinel_files):
         if i:
@@ -119,7 +102,7 @@ def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
         # java.io.tmpdir — disk-backed here, so every micro-batch's
         # offset/commit/state files paid disk fsync for a replay whose
         # durability is irrelevant by construction
-        .option("checkpointLocation", _scratch_dir("engine_stream_chk_"))
+        .option("checkpointLocation", scratch_dir("stream_chk"))
         .trigger(availableNow=True)
         .start()
     )
@@ -321,7 +304,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-1 state only where that state survived. The split threshold and
     the ms-granularity watermark are integer arithmetic so both engines
     compute them identically."""
-    src_dir = _scratch_dir("engine_late_")
+    src_dir = scratch_dir("late")
     batch = load(spark, sf_dir, "events")
     bounds_us = _ts_bounds_us(table_path(sf_dir, "events"))
     if bounds_us is None:
@@ -440,7 +423,7 @@ def stream_sink_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     metastore's role, so a re-run after failure never double-counts a file.
     Append mode, no state — pure exactly-once transport."""
     ev = _stream_source(spark, sf_dir)
-    root = _scratch_dir("engine_stream_sink_")
+    root = scratch_dir("stream_sink")
     out, chk = os.path.join(root, "data"), os.path.join(root, "chk")
     q = (
         ev.select("event_id", "user_id", "event_type", "value")
@@ -657,14 +640,13 @@ def stream_sink_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint provides batch-level exactly-once, the catalog registry
     plays the metastore. The result is read back THROUGH the catalog and
     aggregated — proving ingest ⊕ catalog read round-trip exactly."""
-    import tempfile as _tf
     import uuid as _uuid
 
     from ..catalog import EngineCatalog, engine_sql
 
     ev = _stream_source(spark, sf_dir)
     cat_name = "streamcat_" + _uuid.uuid4().hex[:8]
-    cat = EngineCatalog(spark, cat_name, _scratch_dir("engine_scat_"))
+    cat = EngineCatalog(spark, cat_name, scratch_dir("scat"))
     cat.create_table(
         "default", "events_ingest",
         "event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING",
@@ -680,7 +662,7 @@ def stream_sink_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         ev.writeStream.foreachBatch(sink_batch)
         .option(
-            "checkpointLocation", _scratch_dir("engine_scat_chk_")
+            "checkpointLocation", scratch_dir("scat_chk")
         )
         .trigger(availableNow=True)
         .start()
@@ -715,7 +697,7 @@ def stream_document_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day this scales with source parallelism; the gate prunes
     before any shuffle (there is none)."""
     path = table_path(sf_dir, "documents")
-    src_dir = _scratch_dir("engine_docstream_")
+    src_dir = scratch_dir("docstream")
     shutil.copy(path, os.path.join(src_dir, "part-0.parquet"))
     docs = (
         spark.readStream.schema(file_schema(spark, path))
@@ -751,8 +733,8 @@ def stream_restart_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-submitted job never double-counts a shard); checkpoint + file-sink
     manifest play the reference's metastore⊕staging two-phase roles
     (HiveFileBatchWrite.scala:20-69)."""
-    src_dir = _scratch_dir("engine_restart_src_")
-    root = _scratch_dir("engine_restart_")
+    src_dir = scratch_dir("restart_src")
+    root = scratch_dir("restart")
     out, chk = os.path.join(root, "data"), os.path.join(root, "chk")
 
     batch = load(spark, sf_dir, "events")
@@ -839,8 +821,8 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit, where the divergence was fixture scale, not NULL semantics).
     The batch function does a distributed write only — nothing
     driver-side."""
-    src_dir = _scratch_dir("engine_feb_src_")
-    out_dir = _scratch_dir("engine_feb_out_")
+    src_dir = scratch_dir("feb_src")
+    out_dir = scratch_dir("feb_out")
 
     batch = load(spark, sf_dir, "events")
     batch.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import tempfile
+
 import pytest
 
 from spark_sql_dsv2_extension_spark.catalog import EngineCatalog
@@ -72,10 +77,8 @@ def test_schema_required(spark, fact_table):
         spark.read.format("engine_table").option("path", fact_table).load().collect()
 
 
-def test_compaction_reduces_file_count(spark, sf_dir):
+def test_compaction_reduces_file_count(spark, sf_dir, tmp_path):
     import glob
-    import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -83,8 +86,7 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     from spark_sql_dsv2_extension_spark.tables import load
 
     ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    root = tempfile.mkdtemp(prefix="engine_compact_test_")
-    small, compact = os.path.join(root, "small"), os.path.join(root, "compact")
+    small, compact = str(tmp_path / "small"), str(tmp_path / "compact")
     ev.repartition(16).write.partitionBy("day").parquet(small)
     compact_partitioned(spark, small, compact, "day")
     n_small = len(glob.glob(small + "/day=*/*.parquet"))
@@ -240,3 +242,35 @@ def test_compression_options_shape_file_layout(spark, sf_dir, tmp_path):
 
     assert all(f.endswith(".csv.gz") for f in data_files("csv"))
     assert all(f.endswith(".json.gz") for f in data_files("json"))
+
+
+_SCRATCH_PROBE = """
+import sys
+from spark_sql_dsv2_extension_spark.registry import load_all
+from spark_sql_dsv2_extension_spark.session import get_spark
+spark = get_spark("scratch_probe", cpus=2)
+reg = load_all()
+for key in ("scan_csv", "stream_tumbling_agg"):
+    print(key, reg[key].fn(spark, sys.argv[1]).count())
+"""
+
+
+def test_scratch_dirs_removed_at_exit(sf_dir):
+    """Keys that write files (a csv round trip, a file stream's source,
+    sink and checkpoint) leave no ``engine_*`` directory behind once their
+    process exits."""
+    roots = [r for r in ("/dev/shm", tempfile.gettempdir()) if os.path.isdir(r)]
+
+    def entries():
+        return {
+            os.path.join(r, e) for r in roots for e in os.listdir(r)
+            if e.startswith("engine_")
+        }
+
+    before = entries()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", _SCRATCH_PROBE, sf_dir],
+        cwd=repo, check=True, capture_output=True, timeout=600,
+    )
+    assert entries() - before == set()

@@ -204,8 +204,7 @@ def test_tpch_q8_broadcasts_dims_no_cartesian(spark, sf_dir):
 
 
 def test_chunk_documents_is_mapside(spark, sf_dir):
-    """Token chunking must stay a map-side explode: no hash/range shuffle
-    (the only exchange is the deliberate fan_out round-robin) and no
+    """Token chunking must stay a map-side explode: no shuffle and no
     Python boundary."""
     df = SPECS["ext_chunk_documents"].fn(spark, sf_dir)
     plan = physical_plan(df)
@@ -531,7 +530,7 @@ def test_inverted_index_topk_and_single_term_shuffle(spark, sf_dir):
 
 def test_code_detect_no_shuffle(spark, sf_dir):
     df = SPECS["ext_code_detect"].fn(spark, sf_dir)
-    assert count_exchanges(df) <= 1  # fan_out only
+    assert count_exchanges(df) == 0
     assert "Python" not in physical_plan(df)
 
 
