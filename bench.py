@@ -3,7 +3,8 @@
 process's CPU count) and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {key: sec, ...}, "sf": ...}. The FULL payload (including
-per-key run spreads) is also written to a run-stamped file under
+per-key run spreads and per-run codegen compile counts) is also written
+to a run-stamped file under
 bench_runs/ (gitignored; override with $SPARK_GRAFT_BENCH_OUT) so a
 stdout-tail capture can never truncate it (round-4: BENCH_r04 parsed
 null because queries_runs pushed the line past the driver's 2,000-char
@@ -193,6 +194,33 @@ def _noise_ratio_vs_committed(
     return round(statistics.median(ratios), 3)
 
 
+def _codegen_counters(spark) -> tuple[int, int]:
+    """(classes compiled, compile ns) so far in this JVM: the count of
+    Spark's CodegenMetrics compilation-time histogram and CodeGenerator's
+    cumulative compile time. In local mode the executors share the
+    driver's JVM, so these cover every compile a query causes."""
+    jvm = spark.sparkContext._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime(),
+    )
+
+
+def _run_key(spark, spec, sf_dir: str, codegen: dict) -> float:
+    """One materializing run of ``spec`` (noop sink); returns its wall time
+    and appends the run's codegen compile count and compile seconds to
+    ``codegen[spec.name]``. The counters are read outside the timed region."""
+    c0, ns0 = _codegen_counters(spark)
+    t0 = time.perf_counter()
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = round(time.perf_counter() - t0, 4)
+    c1, ns1 = _codegen_counters(spark)
+    rec = codegen.setdefault(spec.name, {"compiles": [], "compile_s": []})
+    rec["compiles"].append(c1 - c0)
+    rec["compile_s"].append(round((ns1 - ns0) / 1e9, 4))
+    return dt
+
+
 def _default_out_path(repo: str) -> str:
     """Run-stamped full-payload path under bench_runs/ (gitignored).
 
@@ -239,6 +267,7 @@ def main(update_local: bool = False) -> None:
     # the payload carries the cold total (comparable to single-run rounds)
     # and the per-key run spread.
     runs: dict[str, list[float]] = {}
+    codegen: dict[str, dict[str, list]] = {}
     for _run in range(2):
         # Cache hygiene between passes (r16 verdict ask #4): Spark's
         # CacheManager matches on plan identity, so without this, pass 2
@@ -252,10 +281,7 @@ def main(update_local: bool = False) -> None:
             spec = specs.get(key)
             if spec is None:
                 continue
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 4)
-            runs.setdefault(key, []).append(dt)
+            runs.setdefault(key, []).append(_run_key(spark, spec, sf_dir, codegen))
     # Third run for sub-second keys (r8 verdict ask #7): a min-of-2 on a
     # key dominated by Python-worker/JIT warm-up can read 2x off the
     # committed value from one cold sample (udaf_pandas_grouped in r8);
@@ -265,10 +291,7 @@ def main(update_local: bool = False) -> None:
     spark.catalog.clearCache()  # third-run sweep starts cache-clean too
     for key, v in runs.items():
         if min(v) < 1.0:
-            spec = specs[key]
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            v.append(round(time.perf_counter() - t0, 4))
+            v.append(_run_key(spark, specs[key], sf_dir, codegen))
     timings = {k: min(v) for k, v in runs.items()}
     total = round(sum(timings.values()), 4)
     total_v1 = round(sum(t for k, t in timings.items() if k in set(HEADLINE_V1)), 4)
@@ -278,9 +301,7 @@ def main(update_local: bool = False) -> None:
         spec = specs.get(key)
         if spec is None:
             continue
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        extended[key] = round(time.perf_counter() - t0, 4)
+        extended[key] = _run_key(spark, spec, sf_dir, codegen)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     cpus = spark.sparkContext.defaultParallelism
     fp = fixture_fingerprint(sf_dir)
@@ -333,6 +354,9 @@ def main(update_local: bool = False) -> None:
     full["agg"] = "min"
     full["fixture_fingerprint"] = fp
     full["queries_runs"] = runs  # per-key spread: file only, never stdout
+    # per key (headline and extended), per run: classes compiled and
+    # compile seconds -- codegen is a layer inside every key's wall time
+    full["codegen_runs"] = codegen
     try:
         with open(out_path, "w") as f:
             json.dump(full, f, indent=1, sort_keys=True)

@@ -20,7 +20,7 @@ SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("tests")
     yield spark
 
 

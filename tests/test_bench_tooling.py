@@ -1,8 +1,9 @@
-"""Unit tests for bench.py's round-8 tooling: the run-stamped output
-path (a plain bench run must not touch the committed BENCH_LOCAL.json)
-and the noise normalizer.
-No SparkSession needed — these exercise pure helpers against synthetic
-payloads in a tmp repo dir.
+"""Unit tests for bench.py's tooling: the run-stamped output path (a plain
+bench run must not touch the committed BENCH_LOCAL.json), the noise
+normalizer, and the payload contract.
+The helpers are exercised against synthetic payloads in a tmp repo dir;
+only the payload test runs bench.main, on two headline keys and one
+extended key at the test scale.
 """
 
 from __future__ import annotations
@@ -81,3 +82,37 @@ def test_default_cpus_falls_back_to_cpu_count(monkeypatch):
     finally:
         monkeypatch.undo()
         importlib.reload(session)
+
+
+# The stdout line's keys. A tail capture parses this line, so the payload
+# may grow only in the full file.
+STDOUT_KEYS = {
+    "metric", "value", "unit", "headline_version",
+    "cache_cleared_between_passes", "total_v1", "queries", "sf",
+    "fixture_fp", "cpus", "stderr_note",
+}
+
+
+def test_stdout_line_keys_unchanged_and_payload_has_codegen_runs(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    monkeypatch.setattr(bench, "HEADLINE", ["scan_parquet", "agg_hash_group"])
+    monkeypatch.setattr(bench, "EXTENDED", ["win_range_frame"])
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    out = tmp_path / "full.json"
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", str(out))
+    bench.main()
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # noise_ratio_vs_committed appears only when the committed reference
+    # matches this run's fixtures and core count
+    assert set(line) - {"noise_ratio_vs_committed"} == STDOUT_KEYS
+    full = json.load(open(out))
+    runs = {**full["queries_runs"], **{k: [v] for k, v in full["extended_queries"].items()}}
+    assert set(full["codegen_runs"]) == set(runs) == {
+        "scan_parquet", "agg_hash_group", "win_range_frame"
+    }
+    for key, walls in runs.items():
+        cg = full["codegen_runs"][key]
+        assert len(cg["compiles"]) == len(cg["compile_s"]) == len(walls), key
+        assert all(isinstance(n, int) and n >= 0 for n in cg["compiles"]), key
+        assert all(s >= 0 for s in cg["compile_s"]), key
