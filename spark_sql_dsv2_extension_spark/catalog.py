@@ -183,13 +183,7 @@ class EngineCatalog:
         # A30: merge options loaded from an optional conf.path file
         # (explicit options win), then expose the typed A29 view
         self.options = resolve_conf_file(dict(options or {}))
-        self.conf = EngineConf(
-            overrides={
-                k: v for k, v in self.options.items()
-                if k in ("write.dynamic-overwrite", "write.target-file-mb",
-                         "partition.add-batch-size")
-            }
-        )
+        self.conf = EngineConf.from_options(self.options)
         self.root = os.path.join(warehouse, name)
         os.makedirs(self.root, exist_ok=True)
         self._meta_path = os.path.join(self.root, _META_FILE)

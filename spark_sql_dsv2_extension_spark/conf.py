@@ -78,17 +78,6 @@ DYNAMIC_OVERWRITE = register_entry(
     ConfigEntry("write.dynamic-overwrite", True, bool,
                 "default overwrite mode for catalog inserts"),
 )
-TARGET_FILE_MB = register_entry(
-    ENGINE_TYPE,
-    ConfigEntry("write.target-file-mb", 128, int,
-                "compaction target file size"),
-)
-PARTITION_BATCH = register_entry(
-    ENGINE_TYPE,
-    ConfigEntry("partition.add-batch-size", 100, int,
-                "createPartitions batching, reference A23 "
-                "(spark.sql.addPartitionInBatch.size)"),
-)
 
 
 @dataclass
@@ -102,6 +91,13 @@ class EngineConf:
 
     catalog_type: str = ENGINE_TYPE
     overrides: dict[str, Any] = field(default_factory=dict)
+
+    @classmethod
+    def from_options(cls, options: dict[str, Any]) -> "EngineConf":
+        """The typed view of a catalog's options: registered keys become
+        overrides; every other option (``conf.path``, …) stays untyped."""
+        known = _REGISTRY[ENGINE_TYPE]
+        return cls(overrides={k: v for k, v in options.items() if k in known})
 
     def _entry(self, key: str) -> ConfigEntry:
         try:

@@ -78,7 +78,7 @@ def ext_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = t.groupBy("w").agg(
         F.count(F.lit(1)).alias("cs"),
         F.count(F.when(F.col("lang") == "en", 1)).alias("ct"),
-    ).cache()  # consumed twice (scored join + totals): one token-stream pass
+    )
     totals = vocab.agg(F.sum("ct").alias("nt"), F.sum("cs").alias("ns"))
     lr6 = F.round(
         (
@@ -112,10 +112,8 @@ def ext_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # selection WITHOUT a corpus-wide rank window: take the top-N boundary
     # row (TakeOrdered, k-row merge), broadcast it, and flag each doc by
     # sort-key comparison — same result as row_number() <= N, but the
-    # corpus never funnels into a single window partition. per_doc is
-    # cached because BOTH the boundary probe and the final projection
-    # consume it — without the cache the whole token-scoring pipeline
-    # executes twice.
+    # corpus never funnels into a single window partition.
+    # cached: without it, 0.67 → 0.79 s at sf0.01 and 0.80 → 0.86 s at sf0.1
     per_doc = per_doc.cache()
     cut = (
         per_doc.orderBy(F.col("weight6").desc(), "doc_id")

@@ -168,12 +168,8 @@ def _minhash_pairs(
     into ``n_bands`` bands, keeping verified pairs with Jaccard
     ≥ ``threshold``."""
     docs = load(spark, sf_dir, "documents")
-    # sh stays a .cache(), NOT a checkpoint leaf (r17, measured): a leaf
-    # would truncate sig's and shc's analyzed plans, but it stores
-    # deserialized object rows where the cache stores compressed columnar
-    # batches, and the verification joins re-read the full shingle stream
-    # — the leaf variant read 0.2-0.4 s SLOWER on the composites
-    # (survivorship A/B) despite a small win on this key alone.
+    # cached: without it, ext_dedup_survivorship 1.92 → 2.35 s at sf0.01 and
+    # ext_dedup_threshold_curve 1.46 → 1.66 s at sf0.1 (A/B over all 10 keys)
     sh = _shingles(docs).cache()
 
     # 96 minhashes as 96 wide MIN aggregates — every xxhash64 runs inside
@@ -297,7 +293,7 @@ def ext_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle; correct at any sf, affordable only below ~1e6 docs. Kept as the
     reference implementation and small-sf verifier for the LSH path."""
     docs = load(spark, sf_dir, "documents")
-    sh = _shingles(docs).cache()
+    sh = _shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -446,7 +442,7 @@ def ext_near_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("chunk_idx", "chunk"),
-    ).cache()  # consumed twice by the self-join; avoids recomputing the sketch
+    )
     l, r = chunks.alias("l"), chunks.alias("r")
     cand = (
         l.join(
@@ -986,6 +982,7 @@ def ext_near_dup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (non-probabilistic) candidate guarantee, which is what
     lets the exact oracle stay valid."""
     docs = load(spark, sf_dir, "documents")
+    # cached: without it, 0.76 → 0.90 s at sf0.01
     sh = _shingles(docs).cache()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
@@ -1226,7 +1223,7 @@ def ext_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     implies. Sigs are k wide MIN aggregates (the codegen-friendly shape);
     the pair join runs on (i, sig) components, never on text."""
     docs = load(spark, sf_dir, "documents")
-    sh = _shingles(docs).cache()
+    sh = _shingles(docs)
 
     poly = F.aggregate(
         F.transform(
@@ -1360,7 +1357,7 @@ def ext_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-reproducible (explicit affine hashes; one power() expression per
     config)."""
     docs = load(spark, sf_dir, "documents")
-    sh = _shingles(docs).cache()
+    sh = _shingles(docs)
     poly = F.aggregate(
         F.transform(
             F.sequence(F.lit(1), F.length("shingle")),
@@ -1751,7 +1748,6 @@ def ext_dup_pair_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    bgc.cache()
     # Pair-restricted verification (r16, same shape as the minhash
     # verifier): the pair set is tiny, so it is the broadcast build side
     # and the corpus-sized per-doc bigram table is PRUNED to pair docs
@@ -1765,7 +1761,7 @@ def ext_dup_pair_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Lazy checkpoint leaves (r16): bgp is pair-doc-bounded (small) but
     # consumed THREE times (totals, x, y) — without the leaf the pruning
-    # semi-join over the cached bigram table ran once per consumer and
+    # semi-join over the bigram table ran once per consumer and
     # each consumer's plan re-analyzed the whole subtree. totals feeds
     # TWO broadcast builds below, same argument.
     bgp = (
@@ -1930,6 +1926,7 @@ def ext_dup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all joins are over the (tiny) verified pair relation, never
     the corpus."""
     pairs = ext_near_dedup_minhash(spark, sf_dir).select("d1", "d2")
+    # cached: without it, 0.97 → 1.22 s at sf0.01
     pairs.cache()
     e = pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v")).unionAll(
         pairs.select(F.col("d2").alias("u"), F.col("d1").alias("v"))

@@ -327,13 +327,14 @@ def ext_multimodal_meta_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     asset_dir = os.path.join(scratch_dir("mm_assets"), "assets")
     # ingest: payload + typed metadata (incl. its byte length) in one table
-    docs.select(
+    ingest = docs.select(
         "doc_id",
         "lang",
         F.col("n_chars").alias("n_bytes"),
         F.encode("text", "utf-8").alias("payload"),
-    ).write.parquet(asset_dir)
-    assets = spark.read.parquet(asset_dir)
+    )
+    ingest.write.parquet(asset_dir)
+    assets = spark.read.schema(ingest.schema).parquet(asset_dir)
     return (
         assets.filter((F.col("n_bytes") > 150) & (F.col("lang") != "und"))
         .groupBy("lang")

@@ -486,7 +486,7 @@ def ext_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= _KMV_K)
         .select("source", "h")
-        .cache()
+        .cache()  # without it, 0.69 → 0.77 s at sf0.01, 0.85 → 0.94 s at sf0.1
     )
     theta = kmv.groupBy("source").agg(F.max("h").alias("kth"))
     jt = theta.agg(F.min("kth").alias("jt"))

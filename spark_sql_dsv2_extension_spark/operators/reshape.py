@@ -178,6 +178,8 @@ def ext_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 10000).cast("long")).alias("cents"),
         )
+        # one fact scan for all three grains (test_plans pins it); the
+        # with/without A/B read neutral at sf0.01 and sf0.1
         .cache()
     )
 
@@ -248,7 +250,7 @@ def ext_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .cache()
+        .cache()  # without it, 0.77 → 0.83 s at sf0.01 (with/without A/B)
     )
     s2 = (
         ev.filter(F.col("event_type") == "click")
@@ -256,7 +258,6 @@ def ext_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .cache()
     )
     s3 = (
         ev.filter(F.col("event_type") == "purchase")
@@ -533,7 +534,7 @@ def ext_behavior_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "gs",
         F.xxhash64(F.concat_ws("|", "gs")).alias("pk"),
-    ).cache()
+    )
     users_by_p = prof.select("user_id", "pk")
     pcnt = users_by_p.groupBy("pk").agg(F.count(F.lit(1)).alias("cnt"))
     pdistinct = prof.select("pk", "gs").dropDuplicates(["pk"])

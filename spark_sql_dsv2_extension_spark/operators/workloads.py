@@ -609,9 +609,9 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: top supplier — a grouped revenue view consumed TWICE
     (once for the per-supplier rows, once reduced to its max) and joined
-    back. The view is cached so the aggregation runs once; the max is a
-    1-row broadcast (scalar-subquery shape), never a driver collect. Exact
-    because revenue is an exact scaled sum — ties included identically."""
+    back. The max is a 1-row broadcast (scalar-subquery shape), never a
+    driver collect. Exact because revenue is an exact scaled sum — ties
+    included identically."""
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
@@ -622,7 +622,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             )
         )
-        .cache()
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = load(spark, sf_dir, "supplier")
@@ -983,10 +982,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation's lineitem revenue per part.) The threshold comparison is kept
     in exact integer cents (cents*500 > total) so the cut is bit-
     deterministic; the global total is a 1-row broadcast cross-join, the
-    scalar-subquery plan Spark itself produces. The per-part aggregate is
-    computed ONCE and cached for both the rows and the total — at scale the
-    second pass is a re-aggregation of an already-shuffled small relation,
-    not a second fact scan."""
+    scalar-subquery plan Spark itself produces."""
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
@@ -999,7 +995,6 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cents"
             )
         )
-        .cache()
     )
     total = natval.agg(F.sum("cents").alias("total_cents"))
     return (
@@ -1227,13 +1222,13 @@ def ext_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine comparison is exact) — the table a data platform renders
     on every dataset page, and the first sanity gate after any ingest.
 
-    Scale: ONE pass over the table — all per-column aggregates fuse into a
-    single aggregation (count/min/max are partial-aggregable;
+    Scale: count/min/max fuse into one partial-aggregable aggregation;
     count(distinct) of several columns at once expands Spark's plan, so
-    each distinct count runs in its own aggregate over the same cached
-    scan); the profile rows then union driver-free. The profile is
-    columns × 1 rows regardless of table size."""
-    orders = load(spark, sf_dir, "orders").cache()
+    each distinct count runs in its own aggregate over its own scan (a
+    shared cached scan measured slower at sf0.01 and sf0.1); the profile
+    rows then union driver-free. The profile is columns × 1 rows
+    regardless of table size."""
+    orders = load(spark, sf_dir, "orders")
 
     def profile(col: str, distinct_expr, min_expr, max_expr) -> DataFrame:
         return orders.agg(

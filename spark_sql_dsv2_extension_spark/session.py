@@ -46,6 +46,12 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # spark.sql.codegen.cache.maxEntries: see "Scale posture" above.
 CODEGEN_CACHE_ENTRIES = 4096
+# The directory holding this package. Python workers import the engine's
+# UDFs from it, so it goes on their PYTHONPATH: the driver may have found
+# the package through its own sys.path (e.g. a script that inserts the
+# checkout), which workers do not inherit. Spark appends the workers'
+# existing PYTHONPATH to this one.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -79,6 +85,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
 from ..tables import SQL_PROPS_JSON, load, scratch_dir
@@ -191,13 +192,11 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces that plumbing with a columnar writer. Round-trip against the
     original table proves writer and reader jointly."""
     out = os.path.join(scratch_dir("orc"), "part")
-    (
-        load(spark, sf_dir, "part")
-        .select("p_partkey", "p_name", "p_brand", "p_retailprice")
-        .write.mode("overwrite")
-        .orc(out)
+    part = load(spark, sf_dir, "part").select(
+        "p_partkey", "p_name", "p_brand", "p_retailprice"
     )
-    return spark.read.orc(out)
+    part.write.mode("overwrite").orc(out)
+    return spark.read.schema(part.schema).orc(out)
 
 
 @query(
@@ -222,16 +221,18 @@ def sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (ExternalCatalogFileIndex.scala:41-76); columnar engines get
     the same effect from sorted file layout + footer stats."""
     out = os.path.join(scratch_dir("sorted"), "orders")
+    orders = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    )
     (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderdate")
-        .repartitionByRange(8, "o_orderdate")
+        orders.repartitionByRange(8, "o_orderdate")
         .sortWithinPartitions("o_orderdate")
         .write.mode("overwrite")
         .parquet(out)
     )
     return (
-        spark.read.parquet(out)
+        spark.read.schema(orders.schema)
+        .parquet(out)
         .filter(
             (F.col("o_orderdate") >= "1996-01-01")
             & (F.col("o_orderdate") < "1996-04-01")
@@ -351,15 +352,14 @@ def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-read via option, not session conf, so it works in any harness
     session."""
     out = os.path.join(scratch_dir("corrupt"), "nation")
-    load(spark, sf_dir, "nation").select("n_nationkey", "n_name").write.mode(
-        "overwrite"
-    ).parquet(out)
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation.write.mode("overwrite").parquet(out)
     with open(os.path.join(out, "part-corrupt.parquet"), "wb") as f:
         f.write(b"this is not a parquet file")
     return (
-        spark.read.option("ignoreCorruptFiles", "true")
+        spark.read.schema(nation.schema)
+        .option("ignoreCorruptFiles", "true")
         .parquet(out)
-        .select("n_nationkey", "n_name")
     )
 
 
@@ -403,12 +403,10 @@ def compact_partitioned(
     src_path: str,
     dst_path: str,
     part_col: str,
-    target_bytes: int = TARGET_FILE_BYTES,
-    key_cols: list[str] | None = None,
-    schema=None,
+    schema: StructType,
 ) -> None:
     """Small-file compaction for a partitioned parquet table: rewrite each
-    partition into ceil(partition_bytes / target_bytes) files.
+    partition into ceil(partition_bytes / TARGET_FILE_BYTES) files.
 
     The file-count fix for streaming/incremental ingest — thousands of tiny
     files per partition turn every downstream scan into a task-scheduling
@@ -419,11 +417,10 @@ def compact_partitioned(
     (compact only partitions whose file count drifted), never a full-table
     pass.
 
-    ``schema``: pass the source table's schema to compact a dataset that
-    may be EMPTY (zero data files — e.g. the first run of an incremental
-    ingest before any data lands): bare inference fails with
-    UNABLE_TO_INFER_SCHEMA (EMPTY_AUDIT_r9.md E1); with a schema the
-    compactor degrades to an empty (metadata-only) rewrite."""
+    ``schema`` is the source table's schema (partition column included):
+    the source is read under it, never inferred, so an EMPTY source (zero
+    data files, e.g. the first run of an incremental ingest) degrades to
+    an empty, metadata-only rewrite instead of failing inference."""
     sizes: dict[str, int] = {}
     for entry in os.scandir(src_path):
         if entry.is_dir() and "=" in entry.name:
@@ -432,22 +429,20 @@ def compact_partitioned(
                 for f in os.scandir(entry.path)
                 if f.name.endswith(".parquet")
             )
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(src_path)
-    # File-slot hash over the caller's key columns, defaulting to every
-    # non-partition column — the compactor must work for any table shape,
-    # not just ones with an event_id (round-2 ADVICE fix). Partitions whose
-    # value misses the sizes map (nulls, escaped values) fall back to one
-    # file via coalesce(slot_count, 1). An EMPTY sizes map (zero source
+    df = spark.read.schema(schema).parquet(src_path)
+    # File-slot hash over every non-partition column — the compactor must
+    # work for any table shape, not just ones with an event_id. Partitions
+    # whose value misses the sizes map (nulls, escaped values) fall back to
+    # one file via coalesce(slot_count, 1). An EMPTY sizes map (zero source
     # partitions) would make create_map() VOID-typed and fail analysis —
     # there is nothing to size, so every (zero) row takes slot count 1.
-    keys = key_cols or [c for c in df.columns if c != part_col]
+    keys = [c for c in df.columns if c != part_col]
     if sizes:
         n_files = F.create_map(
             *[
                 F.lit(x)
                 for kv in sizes.items()
-                for x in (kv[0], max(1, -(-kv[1] // target_bytes)))
+                for x in (kv[0], max(1, -(-kv[1] // TARGET_FILE_BYTES)))
             ]
         )
         slot_count = F.coalesce(
@@ -483,7 +478,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     small, compact = os.path.join(root, "small"), os.path.join(root, "compact")
     # simulate fragmented ingest: ~16 files per day partition
     ev.repartition(16).write.partitionBy("day").parquet(small)
-    compact_partitioned(spark, small, compact, "day", schema=ev.schema)
+    compact_partitioned(spark, small, compact, "day", ev.schema)
     out = spark.read.schema(ev.schema).parquet(compact)
     return out.select("event_id", "user_id", "event_type", "value")
 
@@ -680,9 +675,6 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
     )
-    # caching before projecting _corrupt_record is the documented Spark
-    # requirement for referencing the corrupt column
-    back = back.cache()
     # PERMISSIVE salvages whichever fields parsed; mask them on malformed
     # rows so the contract is deterministic (corrupt row => all-null + flag)
     bad = F.col("_corrupt_record").isNotNull()
@@ -769,8 +761,11 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "false").parquet(out).select(
-        "event_id", "user_id", "event_type", "value"
+    return (
+        spark.read.schema(ev.schema)
+        .option("recursiveFileLookup", "false")
+        .parquet(out)
+        .select("event_id", "user_id", "event_type", "value")
     )
 
 
@@ -812,7 +807,7 @@ def scan_union_multiformat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.filter(F.col("event_id") % 3 == 2).write.mode("overwrite").json(json_dir)
     schema = "event_id BIGINT, event_type STRING, v4 BIGINT"
     parts = [
-        spark.read.parquet(pq_dir),
+        spark.read.schema(ev.schema).parquet(pq_dir),
         spark.read.schema(schema).option("header", "true").csv(csv_dir),
         spark.read.schema(schema).json(json_dir),
     ]

@@ -425,9 +425,9 @@ def stream_sink_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _stream_source(spark, sf_dir)
     root = scratch_dir("stream_sink")
     out, chk = os.path.join(root, "data"), os.path.join(root, "chk")
+    rows = ev.select("event_id", "user_id", "event_type", "value")
     q = (
-        ev.select("event_id", "user_id", "event_type", "value")
-        .writeStream.format("parquet")
+        rows.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", chk)
         .outputMode("append")
@@ -435,7 +435,7 @@ def stream_sink_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.schema(rows.schema).parquet(out)
 
 
 @query(
@@ -741,6 +741,7 @@ def stream_restart_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     half1 = batch.filter(F.col("event_id") % 2 == 0)
     half2 = batch.filter(F.col("event_id") % 2 == 1)
     half1.coalesce(1).write.parquet(os.path.join(src_dir, "f1"))
+    cols = ("event_id", "user_id", "value")
 
     def run_once():
         stream = (
@@ -749,7 +750,7 @@ def stream_restart_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         q = (
-            stream.select("event_id", "user_id", "value")
+            stream.select(*cols)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", chk)
@@ -762,7 +763,7 @@ def stream_restart_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once()                                        # consumes f1
     half2.coalesce(1).write.parquet(os.path.join(src_dir, "f2"))
     run_once()                                        # same checkpoint: only f2
-    return spark.read.parquet(out)
+    return spark.read.schema(batch.select(*cols).schema).parquet(out)
 
 
 @query(
@@ -838,9 +839,11 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_dir)
     )
 
+    cols = ("event_id", "event_type", "user_id")
+
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         (
-            bdf.select("event_id", "event_type", "user_id")
+            bdf.select(*cols)
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
         )
@@ -851,7 +854,12 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    written = spark.read.option("recursiveFileLookup", "false").parquet(out_dir)
+    # batch_id is not in the schema: partition discovery appends it
+    written = (
+        spark.read.schema(batch.select(*cols).schema)
+        .option("recursiveFileLookup", "false")
+        .parquet(out_dir)
+    )
     return written.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.countDistinct("batch_id").cast("long").alias("n_batches"),

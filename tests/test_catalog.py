@@ -305,32 +305,47 @@ def test_typed_conf_registry_and_folk(tmp_path):
 
     from spark_sql_dsv2_extension_spark.conf import (
         ConfError,
+        ConfigEntry,
         EngineConf,
+        register_entry,
         resolve_conf_file,
     )
 
     conf = EngineConf()
     assert conf.get("write.dynamic-overwrite") is True
-    assert conf.get("write.target-file-mb") == 128
-    conf.set("write.target-file-mb", "256")  # string coerced to int
-    assert conf.get("write.target-file-mb") == 256
-    forked = conf.folk(**{"write.dynamic-overwrite": "false"})
-    assert forked.get("write.dynamic-overwrite") is False
-    assert conf.get("write.dynamic-overwrite") is True  # original untouched
-    assert forked.get("write.target-file-mb") == 256  # override carried
+    conf.set("write.dynamic-overwrite", "no")  # string coerced to bool
+    assert conf.get("write.dynamic-overwrite") is False
+    forked = conf.folk(**{"write.dynamic-overwrite": "true"})
+    assert forked.get("write.dynamic-overwrite") is True
+    assert conf.get("write.dynamic-overwrite") is False  # original untouched
     with pytest.raises(ConfError):
-        conf.set("write.target-file-mb", "not-a-number")
+        conf.set("write.dynamic-overwrite", "maybe")
     with pytest.raises(ConfError):
         conf.get("no.such.key")
+
+    # an int entry under a catalog type of the test's own
+    register_entry("typed_conf_test", ConfigEntry("size-mb", 128, int))
+    sized = EngineConf("typed_conf_test")
+    assert sized.get("size-mb") == 128
+    sized.set("size-mb", "256")  # string coerced to int
+    assert sized.folk().get("size-mb") == 256  # override carried
+    with pytest.raises(ConfError):
+        sized.set("size-mb", "not-a-number")
+
+    # only registered keys become typed overrides
+    view = EngineConf.from_options(
+        {"write.dynamic-overwrite": "false", "conf.path": "/nowhere"})
+    assert view.overrides == {"write.dynamic-overwrite": "false"}
+    assert view.get("write.dynamic-overwrite") is False
 
     # A30 file resolution: directory path appends the default file name
     cdir = tmp_path / "confdir"
     cdir.mkdir()
     (cdir / "catalog-conf.json").write_text(
-        json.dumps({"write.target-file-mb": 64, "extra": "fromfile"}))
+        json.dumps({"write.dynamic-overwrite": False, "extra": "fromfile"}))
     merged = resolve_conf_file(
         {"conf.path": str(cdir), "extra": "explicit"})
-    assert merged["write.target-file-mb"] == 64
+    assert merged["write.dynamic-overwrite"] is False
     assert merged["extra"] == "explicit"  # explicit option wins
 
 

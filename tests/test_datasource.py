@@ -88,7 +88,7 @@ def test_compaction_reduces_file_count(spark, sf_dir, tmp_path):
     ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     small, compact = str(tmp_path / "small"), str(tmp_path / "compact")
     ev.repartition(16).write.partitionBy("day").parquet(small)
-    compact_partitioned(spark, small, compact, "day")
+    compact_partitioned(spark, small, compact, "day", ev.schema)
     n_small = len(glob.glob(small + "/day=*/*.parquet"))
     n_compact = len(glob.glob(compact + "/day=*/*.parquet"))
     n_days = len(glob.glob(small + "/day=*"))
@@ -137,7 +137,7 @@ def test_compaction_generic_key_columns(spark, sf_dir, tmp_path):
     small = str(tmp_path / "sup_small")
     compact = str(tmp_path / "sup_compact")
     sup.repartition(8).write.partitionBy("s_nationkey").parquet(small)
-    compact_partitioned(spark, small, compact, "s_nationkey")
+    compact_partitioned(spark, small, compact, "s_nationkey", sup.schema)
     n_parts = len(glob.glob(small + "/s_nationkey=*"))
     n_compact = len(glob.glob(compact + "/s_nationkey=*/*.parquet"))
     assert n_compact == n_parts

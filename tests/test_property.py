@@ -14,6 +14,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from spark_sql_dsv2_extension_spark.conf import ConfigEntry, register_entry
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _views(spark, sf_dir):
@@ -126,6 +128,12 @@ def test_partition_value_cast_roundtrip(v):
         assert _cast_partition_value(v.isoformat(), DateType()) == v
 
 
+# an int entry under a catalog type of the tests' own: the engine registers
+# no int option, and coercion of one is what the property below covers
+_SIZED_TYPE = "folk_isolation_test"
+register_entry(_SIZED_TYPE, ConfigEntry("size-mb", 128, int))
+
+
 @given(
     mb=st.integers(min_value=1, max_value=10**6),
     dyn=st.booleans(),
@@ -136,14 +144,14 @@ def test_conf_folk_isolation(mb, dyn):
     coercion accepts string renderings of each value."""
     from spark_sql_dsv2_extension_spark.conf import EngineConf
 
+    sized = EngineConf(_SIZED_TYPE)
+    forked_size = sized.folk(**{"size-mb": str(mb)})
+    assert forked_size.get("size-mb") == mb
+    assert sized.get("size-mb") == 128
+
     base = EngineConf()
-    forked = base.folk(**{
-        "write.target-file-mb": str(mb),
-        "write.dynamic-overwrite": str(dyn).lower(),
-    })
-    assert forked.get("write.target-file-mb") == mb
+    forked = base.folk(**{"write.dynamic-overwrite": str(dyn).lower()})
     assert forked.get("write.dynamic-overwrite") is dyn
-    assert base.get("write.target-file-mb") == 128
     assert base.get("write.dynamic-overwrite") is True
 
 

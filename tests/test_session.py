@@ -38,3 +38,39 @@ def test_codegen_cache_holds_a_warm_pass(spark, sf_dir):
     # judge against the pass's cold size.
     assert counts[2] <= 0.25 * max(counts[0], PASS_CLASSES), counts
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+# keys whose Python workers import the engine package (a pandas UDAF and
+# an Arrow UDF)
+WORKER_IMPORT_KEYS = ("udaf_pandas_grouped", "ext_winnow_fingerprints")
+
+
+def test_python_workers_import_the_package_from_any_cwd(sf_dir, tmp_path):
+    """A script that finds the package through its own ``sys.path`` (as
+    bench.py does), started from another directory with no PYTHONPATH,
+    still runs Python-UDF keys: the workers get the package's directory
+    from the session, not from the driver's cwd or environment."""
+    import os
+    import subprocess
+    import sys
+
+    from spark_sql_dsv2_extension_spark.session import PACKAGE_ROOT
+
+    script = f"""
+import sys
+sys.path.insert(0, {PACKAGE_ROOT!r})
+from spark_sql_dsv2_extension_spark.registry import load_all
+from spark_sql_dsv2_extension_spark.session import get_spark
+spark = get_spark("worker_import_test", cpus=2)
+specs = load_all()
+for key in {WORKER_IMPORT_KEYS!r}:
+    specs[key].fn(spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
